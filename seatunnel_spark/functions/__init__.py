@@ -17,6 +17,7 @@ closes the gap two ways:
 
 from __future__ import annotations
 
+import functools
 import re
 from datetime import date, datetime
 
@@ -359,6 +360,80 @@ _CAST_AS = re.compile(
     r"\s+AS\s+(TIMESTAMP|DATETIME|DATE|TIME)\s*$", re.I | re.S)
 
 
+# Text the precheck reads past: string literals (blanked to '') and
+# back-quoted identifiers (blanked to ``, a name that is never unknown).
+_QUOTED_TEXT = re.compile(r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\""
+                          r"|`(?:[^`]|``)*`")
+# A dotted chain `a.b...` starting at an unquoted identifier (not a
+# field of an earlier chain, not the tail of a number), plus the `(`
+# that makes it a qualified function name.
+_DOTTED_CHAIN = re.compile(
+    r"(?<![\w.`$])([A-Za-z_]\w*)(?:\.(?:[A-Za-z_]\w*|``))+(\s*\()?")
+_LAMBDA_PARAMS = re.compile(r"\(([\w\s,]*)\)\s*->|(\w+)\s*->")
+# Chain heads that resolve without naming the frame: the qualified
+# spellings of session variables (system.session.v, session.v).
+_VARIABLE_HEADS = frozenset({"system", "session"})
+
+
+def _blank_quoted(text: str) -> str:
+    return _QUOTED_TEXT.sub(
+        lambda m: "``" if m.group().startswith("`") else "''", text)
+
+
+def _lambda_params(sql: str) -> set[str]:
+    """Lower-cased lambda parameter names anywhere in `sql`."""
+    out: set[str] = set()
+    for m in _LAMBDA_PARAMS.finditer(_blank_quoted(sql)):
+        out.update(p.strip().lower() for p in (m.group(1) or m.group(2)).split(","))
+    return out - {""}
+
+
+def _dotted_heads(expr: str, lambdas: set[str]) -> set[str]:
+    """Lower-cased heads of the dotted references `a.b...` in `expr`
+    that need the frame to resolve: a column (struct field access), a
+    qualifier or a metadata column. Lambda parameters, session-variable
+    qualifiers and qualified function names (`db.fn(`) are left out.
+    Text the check cannot judge reports nothing: a subquery binds its
+    own qualifiers and a comment can hide anything."""
+    text = _blank_quoted(expr)
+    if "--" in text or "/*" in text or re.search(r"\bselect\b", text, re.I):
+        return set()
+    heads = {m.group(1).lower() for m in _DOTTED_CHAIN.finditer(text)
+             if not m.group(2)}
+    return heads - lambdas - _VARIABLE_HEADS
+
+
+def _frame_names(df) -> set[str] | None:
+    """Lower-cased names an expression over `df` can start a dotted
+    reference with: its output and metadata columns and every part of
+    their qualifiers. None when the session has temporary variables
+    (an unqualified variable resolves like a column)."""
+    session = df.sparkSession._jsparkSession
+    if not session.sessionState().catalogManager().tempVariableManager().isEmpty():
+        return None
+    plan = df._jdf.queryExecution().analyzed()
+    names: set[str] = set()
+    for attrs in (plan.output(), plan.metadataOutput()):
+        it = attrs.iterator()
+        while it.hasNext():
+            names.update(p.lower() for p in it.next().qualifiedName().split("."))
+    return names
+
+
+def _call_args(sql: str, name: str) -> list[list[str]]:
+    """Argument lists of every `name(` call site in `sql`."""
+    pat = re.compile(rf"\b{name}\s*\(", re.I)
+    return [_split_call_args(sql, sql.index("(", m.start()))[0]
+            for m in pat.finditer(sql)]
+
+
+def _cast_target(args: list[str]) -> tuple[str, str] | None:
+    """(expression, target) of a CAST(x AS DATE|TIME|TIMESTAMP|DATETIME)
+    call's arguments, else None."""
+    m = _CAST_AS.search(args[0]) if len(args) == 1 else None
+    return (args[0][: m.start()], m.group(1).upper()) if m else None
+
+
 def rewrite_typed_zeta(sql: str, df) -> str:
     """Rewrites that need the input schema (resolved by probing a
     zero-row plan against ``df``, driver-side analysis only):
@@ -371,14 +446,58 @@ def rewrite_typed_zeta(sql: str, df) -> str:
       yyyymmdd ints -> DATE, hhmmss ints -> TIME, epoch-millis longs ->
       TIMESTAMP (SystemFunction.castAs:130-180); Spark rejects or (for
       timestamps) reads SECONDS.
+
+    A site that cannot be typed is passed through unchanged. Sites
+    whose expressions name a qualifier ``df`` does not have (the other
+    side of a join) are known untypable without asking Spark; the
+    rest of the query's probe expressions are typed by one zero-row
+    plan. If that plan fails analysis, each site is probed on its
+    own, which gives every site the type its own probe would.
     """
-    def probe(exprs: list[str]) -> list[str] | None:
+    lambdas = _lambda_params(sql)
+
+    @functools.cache
+    def frame_names() -> set[str] | None:
+        return _frame_names(df)
+
+    def resolvable(e: str) -> bool:
+        heads = _dotted_heads(e, lambdas)
+        if not heads:
+            return True
+        names = frame_names()
+        return names is None or heads <= names
+
+    def run_probe(exprs: list[str]) -> list[str] | None:
         try:
             plan = df.limit(0).selectExpr(
                 *[f"({e}) AS __p{i}" for i, e in enumerate(exprs)])
             return [dt for _, dt in plan.dtypes]
-        except Exception:
+        except Exception:  # noqa: BLE001 — an untypable site passes through
             return None
+
+    # expression -> Spark type; None marks an expression that cannot
+    # resolve against df
+    types: dict[str, str | None] = {}
+    wanted = [e for args in _call_args(sql, "ARRAY") for e in args]
+    wanted += [t[0] for args in _call_args(sql, "CAST")
+               if (t := _cast_target(args))]
+    batch = []
+    for e in dict.fromkeys(wanted):
+        if resolvable(e):
+            batch.append(e)
+        else:
+            types[e] = None
+    if batch and (got := run_probe(batch)) is not None:
+        types.update(zip(batch, got))
+
+    def probe(exprs: list[str]) -> list[str] | None:
+        if all(e in types for e in exprs):
+            got = [types[e] for e in exprs]
+            return None if None in got else got
+        # the batch failed, or an inner rewrite changed this site's text
+        if not all(map(resolvable, exprs)):
+            return None
+        return run_probe(exprs)
 
     def elem_kind(dtype: str, raw: str) -> str:
         base = dtype.split("(")[0]
@@ -411,10 +530,10 @@ def rewrite_typed_zeta(sql: str, df) -> str:
 
     def build_cast(args: list[str]) -> str:
         passthru = f"CAST({', '.join(args)})"
-        m = _CAST_AS.search(args[0]) if len(args) == 1 else None
-        if not m:
+        cast = _cast_target(args)
+        if not cast:
             return passthru
-        expr, target = args[0][: m.start()], m.group(1).upper()
+        expr, target = cast
         dtypes = probe([expr])
         if dtypes is None:
             return passthru

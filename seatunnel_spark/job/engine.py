@@ -11,6 +11,12 @@ the Spark scheduler are the execution/physical layers:
   * per-vertex parallelism   -> spark.sql.shuffle.partitions / AQE (free)
   * checkpoint coordination  -> Structured Streaming checkpointLocation
 
+A batch DAG table that two or more sinks consume is persisted before
+the first sink writes and released after the last one (also when a
+sink raises): the shared upstream is read once, and every sink writes
+the same snapshot of it — the reference's one-source, N-sinks fan-out.
+Streaming tables and multi-table groups are written as they are.
+
 Multi-table jobs: a source may return a dict {table_id: DataFrame};
 the engine tags each with __table_id and unions by superset schema —
 the reference's MultiTableManager.mergeSchema
@@ -19,6 +25,10 @@ the reference's MultiTableManager.mergeSchema
 
 from __future__ import annotations
 
+import logging
+import time
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from seatunnel_spark.job.spec import Block, JobSpec
@@ -26,6 +36,8 @@ from seatunnel_spark.sources import get_source
 from seatunnel_spark.transforms import get_transform
 from seatunnel_spark.sinks import get_sink
 from seatunnel_spark.types import TABLE_ID_COL
+
+log = logging.getLogger(__name__)
 
 
 def merge_multi_table(tables: dict[str, DataFrame]) -> DataFrame:
@@ -125,6 +137,7 @@ class JobEngine:
                 self._groups[blk.output] = df
                 df = merge_multi_table(df)
             tables[blk.output] = df
+            self._register_view(blk.output, df)
         pending = list(spec.transforms)
         progress = True
         while pending and progress:
@@ -132,12 +145,30 @@ class JobEngine:
             for blk in list(pending):
                 if all(i in tables for i in blk.inputs):
                     tables[blk.output] = self._apply_transform(blk, tables)
+                    self._register_view(blk.output, tables[blk.output])
                     pending.remove(blk)
                     progress = True
         if pending:
             missing = {i for b in pending for i in b.inputs if i not in tables}
             raise ValueError(f"unresolvable transform inputs: {sorted(missing)}")
         return tables
+
+    @staticmethod
+    def _register_view(name: str, df: DataFrame) -> None:
+        """Make a DAG table visible to Sql transforms by its name
+        (`__`-prefixed names are generated, not user-declared)."""
+        if not name.startswith("__"):
+            df.createOrReplaceTempView(name)
+
+    def _restore_views(self, blk: Block, tables: dict[str, DataFrame],
+                       passed: DataFrame | None) -> None:
+        """A Sql transform registers the frame it was handed under its
+        input's name and the pseudo-tables `dual`/`input`. Where that
+        frame is not the DAG table of that name (a per-table group
+        frame, a union of several inputs), put the DAG table back."""
+        for name in {*blk.inputs[:1], "dual", "input"} & tables.keys():
+            if tables[name] is not passed:
+                self._register_view(name, tables[name])
 
     # Transforms that operate ON the table-routing itself: in grouped
     # (multi-table) mode they rewrite the table->DataFrame dict keys.
@@ -190,6 +221,7 @@ class JobEngine:
                 else:
                     eff.setdefault("plugin_input", opts.get("plugin_input"))
                     group_out[tid] = get_transform(blk.plugin, eff).apply(tdf)
+            self._restore_views(blk, tables, None)
             self._groups[blk.output] = group_out
             return merge_multi_table(group_out)
         t = get_transform(blk.plugin, opts)
@@ -198,11 +230,9 @@ class JobEngine:
             df = merge_multi_table({name: tables[name] for name in blk.inputs})
         else:
             df = tables[blk.inputs[0]]
-        # Register every upstream table as a view so Sql transforms can join.
-        for name, tdf in tables.items():
-            if not name.startswith("__"):
-                tdf.createOrReplaceTempView(name)
-        return t.apply(df)
+        out = t.apply(df)
+        self._restore_views(blk, tables, df)
+        return out
 
     # -- execution --------------------------------------------------------
     def run(self, spec: JobSpec) -> dict[str, DataFrame]:
@@ -211,8 +241,6 @@ class JobEngine:
         default: Zeta retries 3× unless told otherwise; a library call
         fails fast unless the job opts in — set job.retry.times for the
         Zeta behavior."""
-        import time as _time
-
         retries = int(spec.env.get("job.retry.times", 0) or 0)
         interval = float(spec.env.get("job.retry.interval.seconds", 3) or 0)
         attempt = 0
@@ -228,31 +256,75 @@ class JobEngine:
                 for q in self.spark.streams.active:
                     q.stop()
                 if interval:
-                    _time.sleep(interval)
+                    time.sleep(interval)
 
-    def _run_once(self, spec: JobSpec) -> dict[str, DataFrame]:
-        streaming = spec.mode == "STREAMING"
-        tables = self.build_tables(spec, streaming)
+    def _sink_inputs(self, spec: JobSpec, blk: Block,
+                     tables: dict[str, DataFrame]) -> list[str]:
+        """The DAG tables sink `blk` writes: its plugin_input names, or
+        the last table built when it names none."""
+        names = []
+        for name in blk.inputs or [next(reversed(tables))]:
+            if name not in tables:
+                # a plugin_input naming a table no block declared
+                # (read_from_paimon_with_hdfs_ha_to_assert.conf:
+                # plugin_input=paimon_source with no matching
+                # plugin_output) — the reference's order-based
+                # connection only applies to single-source pipelines;
+                # in a multi-source job a dangling name is a typo that
+                # must not silently rebind to another source's data
+                if len(spec.sources) > 1:
+                    raise ValueError(
+                        f"plugin_input {name!r} matches no declared "
+                        f"plugin_output (have: {list(tables)}) in a "
+                        "multi-source job")
+                name = next(reversed(tables))
+            names.append(name)
+        return names
+
+    def _shared_upstreams(self, writes: list[tuple[Block, list[str]]]) -> list[str]:
+        """DAG tables that two or more sink writes read, multi-table
+        groups left out (their sinks write the per-table frames)."""
+        uses = Counter(name for _, names in writes for name in names)
+        return [name for name, n in uses.items()
+                if n > 1 and name not in self._groups]
+
+    def _poll_observation(self, key: str, plugin: str, name: str,
+                          obs) -> None:
+        """Record a sink's rows_written. Observation.get BLOCKS until
+        the SQL-execution event fires, and a sink that ran an RDD-level
+        action (or none) never produces one, so the JVM side is polled
+        non-blockingly: a mis-declared sink degrades to a missing
+        metric and a warning, not a deadlock."""
+        try:
+            jo = getattr(obs, "_jo", None)
+            for _ in range(50):
+                if jo is not None and not jo.getOrEmpty().isEmpty():
+                    self.metrics[key] = obs.get["rows"]
+                    return
+                time.sleep(0.1)
+            log.warning("sink %s on table %r: no rows_written metric, its "
+                        "write ran no observed Spark action", plugin, name)
+        except Exception as e:  # noqa: BLE001 — a metric, not the job
+            log.warning("sink %s on table %r: rows_written metric "
+                        "unavailable: %s", plugin, name, e)
+
+    def _write_sinks(self, spec: JobSpec, writes: list[tuple[Block, list[str]]],
+                     tables: dict[str, DataFrame], streaming: bool):
+        """Hand each sink its tables; returns the streaming query
+        handles and the (metric key, plugin, table, Observation) of
+        each observed batch write."""
         handles = []
-        observations: list[tuple[str, str, object]] = []
-        self.metrics: dict[str, int] = {}
-        for blk in spec.sinks:
+        observations: list[tuple[str, str, str, object]] = []
+        # the n-th sink of one plugin on one table (n > 1) gets its
+        # own metric key, Plugin#n.table.rows_written
+        ordinal: Counter = Counter()
+        for blk, names in writes:
             sink = get_sink(blk.plugin, blk.options)
-            for name in blk.inputs or [next(reversed(tables))]:
-                if name not in tables:
-                    # a plugin_input naming a table no block declared
-                    # (read_from_paimon_with_hdfs_ha_to_assert.conf:
-                    # plugin_input=paimon_source with no matching
-                    # plugin_output) — the reference's order-based
-                    # connection only applies to single-source pipelines;
-                    # in a multi-source job a dangling name is a typo that
-                    # must not silently rebind to another source's data
-                    if len(spec.sources) > 1:
-                        raise ValueError(
-                            f"plugin_input {name!r} matches no declared "
-                            f"plugin_output (have: {list(tables)}) in a "
-                            "multi-source job")
-                    name = next(reversed(tables))
+            for name in names:
+                ordinal[blk.plugin, name] += 1
+                n = ordinal[blk.plugin, name]
+                key = (f"{blk.plugin}{f'#{n}' if n > 1 else ''}."
+                       f"{name}.rows_written")
                 df = tables[name]
                 if not getattr(sink, "WANTS_CHANGELOG_META", False):
                     pos = [c for c in ("__offset", "__event_ts")
@@ -291,25 +363,27 @@ class JobEngine:
                     obs = Observation()
                     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
                     sink.write(df)
-                    observations.append((blk.plugin, name, obs))
-        for plugin, name, obs in observations:
-            try:
-                # Observation.get BLOCKS until the SQL-execution event
-                # fires; a sink that ran an RDD-level action (or none)
-                # never produces one. Poll the JVM side non-blockingly
-                # so a mis-declared sink degrades to a missing metric,
-                # not a deadlock.
-                import time as _time
+                    observations.append((key, blk.plugin, name, obs))
+        return handles, observations
 
-                jo = getattr(obs, "_jo", None)
-                for _ in range(50):
-                    if jo is not None and not jo.getOrEmpty().isEmpty():
-                        self.metrics[f"{plugin}.{name}.rows_written"] = \
-                            obs.get["rows"]
-                        break
-                    _time.sleep(0.1)
-            except Exception:
-                pass  # sink did not trigger an action (e.g. pure-plan sink)
+    def _run_once(self, spec: JobSpec) -> dict[str, DataFrame]:
+        streaming = spec.mode == "STREAMING"
+        tables = self.build_tables(spec, streaming)
+        writes = [(blk, self._sink_inputs(spec, blk, tables))
+                  for blk in spec.sinks]
+        self.metrics: dict[str, int] = {}
+        persisted: list[DataFrame] = []
+        try:
+            if not streaming:
+                for name in self._shared_upstreams(writes):
+                    persisted.append(tables[name].persist())
+            handles, observations = self._write_sinks(
+                spec, writes, tables, streaming)
+        finally:
+            for df in persisted:
+                df.unpersist()
+        for key, plugin, name, obs in observations:
+            self._poll_observation(key, plugin, name, obs)
         if streaming:
             timeout = spec.env.get("streaming.await.timeout")
             for i, h in enumerate(handles):

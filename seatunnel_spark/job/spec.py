@@ -17,8 +17,18 @@ files map 1:1 onto the dict shape.
 from __future__ import annotations
 
 import json
+import os
 import re
 from dataclasses import dataclass, field
+
+
+def _path_shaped(text: str) -> bool:
+    """A one-line argument with no HOCON structure (braces, brackets,
+    `=`, quotes, `key: value`) that names a file: it has a directory
+    separator or a config-file extension."""
+    return ("\n" not in text and not re.search(r'[{}\[\]="]|:\s', text)
+            and ("/" in text or os.sep in text
+                 or text.lower().endswith((".conf", ".hocon", ".json", ".sql"))))
 
 
 @dataclass
@@ -85,13 +95,16 @@ class JobSpec:
     def from_hocon(cls, text_or_path: str, variables: dict | None = None) -> "JobSpec":
         """Parse a SeaTunnel-style HOCON job config (docs/en/concept/
         config.md). `variables` implements the `-i key=value` CLI
-        substitution feature."""
-        import os
-
+        substitution feature. A path-shaped argument that names no
+        file raises FileNotFoundError rather than being parsed as
+        HOCON text."""
         from seatunnel_spark.job.hocon import load_hocon, parse_hocon
 
         if "\n" not in text_or_path and os.path.exists(text_or_path):
             return cls.from_dict(load_hocon(text_or_path, variables))
+        if _path_shaped(text_or_path):
+            raise FileNotFoundError(
+                f"job config file not found: {text_or_path!r}")
         return cls.from_dict(parse_hocon(text_or_path, variables))
 
     @classmethod

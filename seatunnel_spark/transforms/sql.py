@@ -14,8 +14,6 @@ reference job configs run unchanged.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 
 from seatunnel_spark.functions import (
@@ -59,15 +57,9 @@ class SqlTransform(Transform):
         sql = self._carry_meta_columns(sql, df)
         # Register the input under its DAG name plus the reference's
         # pseudo-table names so SELECT ... FROM <anything declared> works.
-        names = {self.input_name, "dual", "input"} - {None}
-        tmp = f"__st_sql_in_{uuid.uuid4().hex[:8]}"
-        df.createOrReplaceTempView(tmp)
-        for n in names:
+        for n in {self.input_name, "dual", "input"} - {None}:
             df.createOrReplaceTempView(n)
-        try:
-            return spark.sql(sql)
-        finally:
-            pass  # views are session-scoped; harmless to leave registered
+        return spark.sql(sql)
 
     @staticmethod
     def _carry_meta_columns(sql: str, df: DataFrame) -> str:

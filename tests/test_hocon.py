@@ -99,3 +99,18 @@ def test_cli_runs_hocon_job(spark, sf_dir, tmp_path, capsys):
     assert main(["--config", str(conf)]) == 0
     out = capsys.readouterr().out
     assert "l_returnflag" in out
+
+
+@pytest.mark.parametrize("path", ["/nonexistent/jobs/batch.conf",
+                                  "missing_job.conf", "jobs/missing"])
+def test_missing_config_path_raises_file_not_found(path):
+    with pytest.raises(FileNotFoundError, match="not found"):
+        JobSpec.from_hocon(path)
+    with pytest.raises(FileNotFoundError):
+        JobSpec.from_file(path)
+
+
+def test_one_line_hocon_text_still_parses():
+    spec = JobSpec.from_hocon('env { job.mode = "BATCH" }')
+    assert spec.mode == "BATCH"
+    assert JobSpec.from_hocon("parallelism: 2").sources == []
