@@ -420,20 +420,6 @@ def _frame_names(df) -> set[str] | None:
     return names
 
 
-def _call_args(sql: str, name: str) -> list[list[str]]:
-    """Argument lists of every `name(` call site in `sql`."""
-    pat = re.compile(rf"\b{name}\s*\(", re.I)
-    return [_split_call_args(sql, sql.index("(", m.start()))[0]
-            for m in pat.finditer(sql)]
-
-
-def _cast_target(args: list[str]) -> tuple[str, str] | None:
-    """(expression, target) of a CAST(x AS DATE|TIME|TIMESTAMP|DATETIME)
-    call's arguments, else None."""
-    m = _CAST_AS.search(args[0]) if len(args) == 1 else None
-    return (args[0][: m.start()], m.group(1).upper()) if m else None
-
-
 def rewrite_typed_zeta(sql: str, df) -> str:
     """Rewrites that need the input schema (resolved by probing a
     zero-row plan against ``df``, driver-side analysis only):
@@ -447,12 +433,10 @@ def rewrite_typed_zeta(sql: str, df) -> str:
       TIMESTAMP (SystemFunction.castAs:130-180); Spark rejects or (for
       timestamps) reads SECONDS.
 
-    A site that cannot be typed is passed through unchanged. Sites
+    A site that cannot be typed is passed through unchanged. A site
     whose expressions name a qualifier ``df`` does not have (the other
-    side of a join) are known untypable without asking Spark; the
-    rest of the query's probe expressions are typed by one zero-row
-    plan. If that plan fails analysis, each site is probed on its
-    own, which gives every site the type its own probe would.
+    side of a join) is known untypable without asking Spark, so it is
+    never probed.
     """
     lambdas = _lambda_params(sql)
 
@@ -467,37 +451,15 @@ def rewrite_typed_zeta(sql: str, df) -> str:
         names = frame_names()
         return names is None or heads <= names
 
-    def run_probe(exprs: list[str]) -> list[str] | None:
+    def probe(exprs: list[str]) -> list[str] | None:
+        if not all(map(resolvable, exprs)):
+            return None
         try:
             plan = df.limit(0).selectExpr(
                 *[f"({e}) AS __p{i}" for i, e in enumerate(exprs)])
             return [dt for _, dt in plan.dtypes]
-        except Exception:  # noqa: BLE001 — an untypable site passes through
+        except Exception:
             return None
-
-    # expression -> Spark type; None marks an expression that cannot
-    # resolve against df
-    types: dict[str, str | None] = {}
-    wanted = [e for args in _call_args(sql, "ARRAY") for e in args]
-    wanted += [t[0] for args in _call_args(sql, "CAST")
-               if (t := _cast_target(args))]
-    batch = []
-    for e in dict.fromkeys(wanted):
-        if resolvable(e):
-            batch.append(e)
-        else:
-            types[e] = None
-    if batch and (got := run_probe(batch)) is not None:
-        types.update(zip(batch, got))
-
-    def probe(exprs: list[str]) -> list[str] | None:
-        if all(e in types for e in exprs):
-            got = [types[e] for e in exprs]
-            return None if None in got else got
-        # the batch failed, or an inner rewrite changed this site's text
-        if not all(map(resolvable, exprs)):
-            return None
-        return run_probe(exprs)
 
     def elem_kind(dtype: str, raw: str) -> str:
         base = dtype.split("(")[0]
@@ -530,10 +492,10 @@ def rewrite_typed_zeta(sql: str, df) -> str:
 
     def build_cast(args: list[str]) -> str:
         passthru = f"CAST({', '.join(args)})"
-        cast = _cast_target(args)
-        if not cast:
+        m = _CAST_AS.search(args[0]) if len(args) == 1 else None
+        if not m:
             return passthru
-        expr, target = cast
+        expr, target = args[0][: m.start()], m.group(1).upper()
         dtypes = probe([expr])
         if dtypes is None:
             return passthru

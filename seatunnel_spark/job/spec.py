@@ -24,11 +24,11 @@ from dataclasses import dataclass, field
 
 def _path_shaped(text: str) -> bool:
     """A one-line argument with no HOCON structure (braces, brackets,
-    `=`, quotes, `key: value`) that names a file: it has a directory
-    separator or a config-file extension."""
-    return ("\n" not in text and not re.search(r'[{}\[\]="]|:\s', text)
+    `=`, `:`, quotes) that names a file: it has a directory separator
+    or a HOCON config-file extension."""
+    return ("\n" not in text and not re.search(r'[{}\[\]=:"]', text)
             and ("/" in text or os.sep in text
-                 or text.lower().endswith((".conf", ".hocon", ".json", ".sql"))))
+                 or text.lower().endswith((".conf", ".hocon"))))
 
 
 @dataclass

@@ -1,7 +1,9 @@
-"""A batch job whose sinks share one upstream table: the engine reads
-that upstream once (it persists the table for the sink loop and
-releases it afterwards, also when a sink raises), every sink writes
-the same snapshot, and each sink keeps its own rows_written metric."""
+"""A batch job whose sinks share one upstream table: when computing
+that upstream again would re-run a shuffle or give other rows, the
+engine reads it once (it persists the table for the sink loop and
+releases it afterwards, also when a sink raises) and every sink writes
+the same snapshot; a deterministic scan is scanned once per sink. Each
+sink keeps its own rows_written metric."""
 
 import logging
 import uuid
@@ -23,16 +25,18 @@ def src_path(spark, tmp_path_factory):
     return path
 
 
-def _spec(src: str, sinks: list[dict]) -> JobSpec:
+# rand() makes each evaluation of the upstream differ, so only sinks
+# that read one snapshot of it can agree row for row
+NOISY = "SELECT id, k, rand() AS r FROM src"
+
+
+def _spec(src: str, sinks: list[dict], query: str = NOISY) -> JobSpec:
     return JobSpec.from_dict({
         "env": {"job.mode": "BATCH"},
         "source": [{"plugin_name": "LocalFile", "plugin_output": "src",
                     "path": src, "file_format_type": "parquet"}],
-        # rand() makes each evaluation of the upstream differ, so only
-        # sinks that read one snapshot of it can agree row for row
         "transform": [{"plugin_name": "Sql", "plugin_input": "src",
-                       "plugin_output": "noisy",
-                       "query": "SELECT id, k, rand() AS r FROM src"}],
+                       "plugin_output": "noisy", "query": query}],
         "sink": sinks,
     })
 
@@ -87,6 +91,27 @@ def test_shared_upstream_is_read_once_and_released(spark, src_path, tmp_path):
     a, b = _rows(spark, str(tmp_path / "a")), _rows(spark, str(tmp_path / "b"))
     assert len(a) == N_ROWS and a == b
     assert _persisted(spark) <= before
+
+
+@pytest.mark.parametrize("query,reads", [
+    # a deterministic scan: scanning it again is cheaper than caching it
+    ("SELECT id, k FROM src WHERE id >= 0", 2),
+    # an aggregate: one cached copy instead of one shuffle per sink
+    ("SELECT k, count(*) AS n FROM src GROUP BY k", 1),
+])
+def test_shared_upstream_persisted_only_when_recompute_shuffles(
+        spark, src_path, tmp_path, query, reads):
+    group = f"fanout-{uuid.uuid4().hex[:8]}"
+    spark.sparkContext.setJobGroup(group, "shared upstream policy")
+    try:
+        JobEngine(spark).run(_spec(src_path, [_file_sink(str(tmp_path / "a")),
+                                              _file_sink(str(tmp_path / "b"))],
+                                   query))
+        read = _input_records(spark, group)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert reads * N_ROWS <= read < reads * N_ROWS + 100, read
+    assert _rows(spark, str(tmp_path / "a")) == _rows(spark, str(tmp_path / "b"))
 
 
 def test_shared_upstream_released_when_a_sink_raises(spark, src_path,

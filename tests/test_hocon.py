@@ -114,3 +114,4 @@ def test_one_line_hocon_text_still_parses():
     spec = JobSpec.from_hocon('env { job.mode = "BATCH" }')
     assert spec.mode == "BATCH"
     assert JobSpec.from_hocon("parallelism: 2").sources == []
+    assert JobSpec.from_hocon("path:/tmp/x").sources == []

@@ -2,12 +2,12 @@
 ARRAY(...) and CAST(x AS DATE|TIME|TIMESTAMP) sites with zero-row
 probes against the Sql transform's input frame. A site whose
 expression names a qualifier the frame does not have cannot resolve,
-so it is passed through without asking Spark; the remaining sites go
-to Spark as one batched probe.
+so it is passed through without asking Spark; every other site is
+probed on its own, as before the precheck existed.
 
 The expected strings below are the rewrite's output before the
-precheck and the batching existed, so these cases pin that neither
-changes what the rewrite emits."""
+precheck existed, so these cases pin that it does not change what the
+rewrite emits."""
 
 import logging
 
@@ -150,7 +150,7 @@ CASES = [
      "SELECT ARRAY((SELECT max(q.id) FROM range(3) q), i) AS a FROM t0",
      "SELECT array(CAST(((SELECT max(q.id) FROM range(3) q)) AS bigint), "
      "CAST((i) AS bigint)) AS a FROM t0"),
-    # -- sites that cannot resolve, and batch fallbacks --------------------
+    # -- sites that cannot resolve ----------------------------------------
     ("unknown_qualifier", "base",
      "SELECT CAST(t.i AS DATE) AS a FROM t0",
      "SELECT CAST(t.i AS DATE) AS a FROM t0"),
@@ -286,18 +286,23 @@ def test_etl_join_makes_no_failing_probe(spark, typed_frames, monkeypatch):
                                     "query": ETL_JOIN_SQL}).apply(li)
     finally:
         logger.removeHandler(errors)
-    assert spy.failed == 0
-    assert spy.calls <= 1
+    # every probe site names l. or o., which the lineitem frame lacks
+    assert (spy.calls, spy.failed) == (0, 0)
     assert errors.records == []
     row = out.first()
     assert (row["ship_days"], row["priority"]) == (4, "1-URGENT")
 
 
-def test_sites_share_one_probe(typed_frames, monkeypatch):
+def test_mixed_aggregate_sites_probe_once_each(typed_frames, monkeypatch):
+    """An aggregate site and a column site of one GROUP BY query each
+    resolve alone: one probe per site, as before the precheck, and none
+    of them fails analysis."""
     spy = _ProbeSpy(monkeypatch)
     out = rewrite_typed_zeta(
-        "SELECT ARRAY(i, s) AS a, CAST(i AS DATE) AS a2, "
-        "CAST(b AS TIMESTAMP) AS a3, ARRAY(ti, i) AS a4 FROM t0",
+        "SELECT CAST(max(b) AS TIMESTAMP) AS a, CAST(i AS DATE) AS k "
+        "FROM t0 GROUP BY i",
         typed_frames["base"])
-    assert (spy.calls, spy.failed) == (1, 0)
-    assert out.count("CAST(") == 6  # every site still rewritten
+    assert (spy.calls, spy.failed) == (2, 0)
+    assert out == ("SELECT timestamp_millis(CAST((max(b)) AS BIGINT)) AS a, "
+                   "to_date(CAST((i) AS STRING), 'yyyyMMdd') AS k "
+                   "FROM t0 GROUP BY i")
