@@ -1,42 +1,51 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float> or
+array<double>).
 
-Baseline: brute-force cosine top-k — a broadcast join of the (small)
-query set against the (huge) corpus, so the corpus is scanned once
-with NO shuffle of the vectors; per-partition top-k folds via
-aggregation before the final k-merge.
+Exact top-k (brute_force_topk, hard_negatives): the small query side
+is collected once and shipped in the task closure; the corpus is
+scanned once, with no shuffle, by ONE MapInPandas stage that scores
+each Arrow batch against every query and emits only the per-batch
+top-k contenders to the final rank window.
 
-Scale path: random-hyperplane LSH bucketing (IVF-style coarse
-quantization) — probe only matching buckets, trading recall for a
-~buckets× scan reduction. At 100 TB the bucketed variant also
-partition-prunes if the corpus is written partitioned by bucket.
+Scale path: IVF (k-means coarse cells, multi-probe) and
+random-hyperplane LSH buckets score only the (query, corpus-row)
+pairs that share a cell or bucket key — a ~nlist/nprobe (resp.
+~buckets×) scan reduction. hard_negatives_ivf meets queries and
+corpus per cell in one cogroup stage, so neither side is broadcast.
+At 100 TB the IVF index also partition-prunes when the corpus is
+written partitioned by cell (write_ivf_index).
 
-Round-11 optimization (arithmetic UNCHANGED, bit-for-bit):
+Every ANN operator scores pairs through the same kernels
+(_pair_scores). They reproduce the Catalyst folds
+aggregate(zip_with(x*y), 0.0D, acc+x) bit for bit: each product is
+taken in the vectors' element type (float32 for array<float>,
+float64 for array<double>) and added to a float64 accumulator in
+element order. Other element types are cast to array<double> at
+entry. A pair whose score is undefined — a null vector on either
+side, vectors of different lengths, a zero norm, or a NaN score —
+scores null and ranks after every non-null score.
 
-* `_spread` — scale-adaptive scan parallelism. A local bench reads a
-  tiny single-row-group parquet as ONE scan task, serializing every
-  per-row projection (cell assignment, PQ encoding, norms) and every
-  per-pair score on one core while the rest idle; the conditional
-  round-robin repartition is a no-op at scale where the corpus
-  already arrives in many splits.
-* Norms are precomputed once per ROW on each join side instead of
-  once per PAIR — the same expression evaluated |Q|+|C| times
-  instead of |Q|·|C| times; the per-pair cosine divides by the
-  product of the two materialized columns exactly as before.
-* ADC scoring precomputes the classic per-query distance table
-  (Jégou et al. 2011): lut[s][c] = ||q_sub_s − codebook[s][c]||²,
-  materialized once per query row with the same fold expressions;
-  the per-pair score collapses from m·(dim/m) multiply-adds to m
-  array lookups. Each LUT entry carries the fold's own 0.0 seed and
-  the per-pair sum keeps the per-subspace grouping, so distances
-  are bit-identical and every oracle replays unchanged.
+`_spread` gives tiny local scans scale-adaptive parallelism (a no-op
+at scale). ADC scoring precomputes the per-query distance table
+(Jégou et al. 2011): lut[s][c] = ||q_sub_s − codebook[s][c]||², one
+entry per subspace partial with the fold's own 0.0 seed, so the
+per-pair score is m lookups and distances stay bit-identical.
 """
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from seatunnel_spark.dataops._cache import ensure_parallelism as _ensure
 from seatunnel_spark.dataops._cache import qcol as _qcol
+
+# The scoring closures run in Python workers and call this module's
+# kernels. Shipping the module's functions by value lets them run on a
+# worker that cannot import seatunnel_spark.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -49,15 +58,16 @@ def _norm(a: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-side pair scoring (round 12, guide §4.2): the per-pair cosine
-# was an INTERPRETED Catalyst HOF fold (~6-10 µs/pair — measured round
-# 11; full expression unrolling was tried twice and is ~3x SLOWER, see
-# OPTIMIZATION_r11.md). The kernels below batch whole pair blocks
-# through numpy while reproducing the folds' EXACT IEEE arithmetic:
-# every score is accumulated left-associatively in element order from
-# a 0.0 seed — acc += q[d]*c[d] (resp. (a-b)*(a-b)) for d = 0..dim-1 —
-# one elementwise multiply and one add per term, so each result is
-# bit-identical to the Catalyst fold it replaces (pinned by
+# Arrow-side pair scoring (guide §4.2): an interpreted Catalyst HOF fold
+# costs ~6-10 µs per pair (measured round 11; full expression unrolling
+# was ~3x SLOWER, see OPTIMIZATION_r11.md). The kernels below batch
+# whole pair blocks through numpy while reproducing the folds' EXACT
+# IEEE arithmetic: every score is accumulated left-associatively in
+# element order from a 0.0 float64 seed — acc += q[d]*c[d] (resp.
+# (a-b)*(a-b)) for d = 0..dim-1 — with the product taken in the
+# vectors' element type, just as Spark multiplies float*float in
+# float32 before adding it to the double accumulator. Each result is
+# bit-identical to the fold (pinned by
 # tests/test_dataops.py::test_gemm_kernels_bit_identical_to_folds).
 # Deliberately NOT a BLAS dot (np.dot/np.matmul reorders the summation
 # and its results, while numerically close, would not be provably
@@ -68,12 +78,13 @@ _GEMM_BLOCK = 4_000_000  # max score-matrix cells per query block (~32 MB)
 
 
 def _gemm_pairs(Q, C, l2: bool = False):
-    """(nq, dim) x (nc, dim) -> (nq, nc) pairwise dot products (or
-    squared-L2 with l2=True), accumulated in the folds' exact order."""
+    """(nq, dim) x (nc, dim) -> (nq, nc) float64 pairwise dot products
+    (or squared-L2 with l2=True), accumulated in the folds' exact
+    order; each term is computed in np.result_type(Q, C)."""
     import numpy as np
 
     S = np.zeros((Q.shape[0], C.shape[0]))
-    tmp = np.empty_like(S)
+    tmp = np.empty(S.shape, dtype=np.result_type(Q, C))
     for d in range(Q.shape[1]):
         if l2:
             np.subtract(Q[:, d, None], C[None, :, d], out=tmp)
@@ -85,13 +96,57 @@ def _gemm_pairs(Q, C, l2: bool = False):
 
 
 def _row_sqnorms(M):
-    """Per-row Σ x*x in the _norm fold's exact accumulation order."""
+    """Per-row Σ x*x in the _norm fold's exact accumulation order (each
+    square in M's dtype, summed into float64)."""
     import numpy as np
 
     s = np.zeros(M.shape[0])
     for d in range(M.shape[1]):
         s += M[:, d] * M[:, d]
     return s
+
+
+def _vec_matrix(vecs, dtype):
+    """One batch's vectors as a (rows, width) matrix of `dtype`,
+    zero-padded past each row's end, plus every row's length (-1 for
+    a null vector). A null element becomes NaN."""
+    import numpy as np
+
+    vecs = list(vecs)
+    lens = np.array([-1 if v is None else len(v) for v in vecs],
+                    dtype=np.int64)
+    width = int(lens.max(initial=0))
+    if (lens == width).all():
+        return np.array(vecs, dtype=dtype).reshape(len(vecs), width), lens
+    M = np.zeros((len(vecs), width), dtype=dtype)
+    for i, v in enumerate(vecs):
+        if v is not None:
+            M[i, :len(v)] = v
+    return M, lens
+
+
+def _pair_scores(Q, qlen, C, clen, l2: bool = False):
+    """(nq, nc) cosine scores (squared-L2 with l2=True) from the
+    bit-identical kernels, NaN — null once it reaches Spark — for
+    every pair the fold leaves undefined: a null vector on either
+    side, lengths that differ, or a zero norm."""
+    import numpy as np
+
+    width = max(Q.shape[1], C.shape[1])
+    if Q.shape[1] < width:
+        Q = np.pad(Q, ((0, 0), (0, width - Q.shape[1])))
+    if C.shape[1] < width:
+        C = np.pad(C, ((0, 0), (0, width - C.shape[1])))
+    S = _gemm_pairs(Q, C, l2=l2)
+    bad = (qlen[:, None] != clen[None, :]) | (qlen < 0)[:, None]
+    if not l2:
+        qn = np.sqrt(_row_sqnorms(Q))
+        cn = np.sqrt(_row_sqnorms(C))
+        bad |= (qn == 0)[:, None] | (cn == 0)[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S /= qn[:, None] * cn[None, :]
+    S[bad] = np.nan
+    return S
 
 
 def _keep_topk(S, k: int, margin: float, descending: bool,
@@ -103,60 +158,76 @@ def _keep_topk(S, k: int, margin: float, descending: bool,
     slack, so its F.round-ed score is STRICTLY worse than k others'
     and it can never enter the global top-k — the emitted rows are a
     provable superset of the window's winners (margin 0.0 when no
-    rounding: ties at the k-th value are all kept). NaN scores are
-    always kept (superset; the JVM window orders them). `invalid`
-    marks pairs the join predicate would have excluded."""
+    rounding: ties at the k-th value are all kept). NaN scores reach
+    the window as nulls, which rank last, so they count as the worst
+    score. `invalid` marks pairs that are no candidates at all."""
     import numpy as np
 
     nq, nc = S.shape
-    nan = np.isnan(S)
-    X = S if descending else -S
-    if nan.any():
-        X = np.where(nan, np.inf if descending else -np.inf, X)
+    X = np.where(np.isnan(S), -np.inf, S if descending else -S)
     if invalid is not None:
-        X = np.where(invalid, -np.inf, X)
+        X[invalid] = -np.inf
     if nc <= k:
         keep = np.ones((nq, nc), dtype=bool)
     else:
         kth = np.partition(X, nc - k, axis=1)[:, nc - k]
         keep = X >= (kth - margin)[:, None]
-        if nan.any():
-            keep |= nan
     if invalid is not None:
         keep &= ~invalid
     return keep
 
 
-def _map_gemm_topk(qrows, qid_type, corpus: DataFrame, k: int,
+def _elem_dtype(field) -> str:
+    """numpy dtype of an array<float|double> schema field's elements."""
+    from pyspark.sql.types import FloatType
+
+    if isinstance(field.dataType.elementType, FloatType):
+        return "float32"
+    return "float64"
+
+
+def _vec_col(df: DataFrame, col: str, alias: str) -> Column:
+    """`col` AS `alias`, ready for the scoring kernels: float and
+    double elements pass through — the kernels multiply in the element
+    type, as the folds do — and any other element type is cast to
+    double."""
+    from pyspark.sql.types import DoubleType, FloatType
+
+    v = F.col(col)
+    et = getattr(df.select(v).schema[0].dataType, "elementType", None)
+    if not isinstance(et, (FloatType, DoubleType)):
+        v = v.cast("array<double>")
+    return v.alias(alias)
+
+
+def _map_gemm_topk(qrows, qschema, corpus: DataFrame, k: int,
                    round_to: int | None, l2: bool = False,
                    anti_label: bool = False,
                    key_col: str | None = None,
                    out_score: str = "cosine") -> DataFrame:
     """Broadcast-queries pair scoring as ONE MapInPandas stage over
-    the corpus scan (guide §4.2), replacing the per-pair fold on a
-    broadcast join: `qrows` is the COLLECTED query side (small by the
-    operators' broadcast contract — the former F.broadcast collected
-    the same rows to the driver), shipped in the task closure and
-    built into a matrix once per task (guide §4.5); each Arrow batch
-    of corpus rows is scored against it with the bit-identical GEMM
-    kernels and only the per-(query, batch) top-k contenders are
-    emitted (_keep_topk superset — the final rank window reproduces
-    the former results exactly). With `key_col` (IVF cell / LSH
+    the corpus scan (guide §4.2). `qrows` are the COLLECTED query rows
+    (__qid, __qv [, __ql] [, key_col]) with schema `qschema` — small
+    by the operators' broadcast contract — shipped in the task closure
+    and built into a matrix once per task (guide §4.5). Each Arrow
+    batch of corpus rows (__cid, __cv [, __cl] [, key_col]) is scored
+    against them with _pair_scores, and only the per-(query, batch)
+    top-k contenders are emitted (_keep_topk superset — the final rank
+    window picks the exact top-k). With `key_col` (IVF cell / LSH
     bucket), scoring touches only the (query, corpus-row) pairs whose
-    keys match, exactly like the former equi-join. The corpus is
-    never shuffled and only the projected columns cross the Python
-    boundary."""
+    keys match; with `anti_label`, only pairs whose non-null labels
+    differ. The corpus is never shuffled and only the projected
+    columns cross the Python boundary."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     import numpy as np
 
     if anti_label:
-        # NULL query labels can never mismatch — excluded, like the
-        # JVM inequality predicate
+        # a NULL label can neither agree nor disagree — excluded
         qrows = [r for r in qrows if r[2] is not None]
     qids = [r[0] for r in qrows]
-    Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                  dtype=np.float64) if qrows else np.zeros((0, 0))
+    Q, qlen = _vec_matrix([r[1] for r in qrows], _elem_dtype(qschema["__qv"]))
+    cdtype = _elem_dtype(corpus.schema["__cv"])
     qlab = [r[2] for r in qrows] if anti_label else None
     qkey_idx: dict | None = None
     if key_col is not None:
@@ -166,7 +237,7 @@ def _map_gemm_topk(qrows, qid_type, corpus: DataFrame, k: int,
             qkey_idx.setdefault(r[kpos], []).append(i)
     margin = 0.0 if round_to is None else 2.0 * (10.0 ** -round_to)
     out_schema = StructType([
-        StructField("__qid", qid_type),
+        StructField("__qid", qschema["__qid"].dataType),
         StructField("__cid", corpus.schema["__cid"].dataType),
         StructField(out_score, DoubleType()),
     ])
@@ -175,31 +246,24 @@ def _map_gemm_topk(qrows, qid_type, corpus: DataFrame, k: int,
         import numpy as np
         import pandas as pd
 
-        if Qm.shape[0] == 0:
+        if not qids:
             return
-        qn = None if l2 else np.sqrt(_row_sqnorms(Qm))
         qid_arr = np.array(qids)
         qlab_arr = np.array(qlab) if anti_label else None
 
         def _block(sub, qsel):
-            C = np.array(sub["__cv"].to_list(), dtype=np.float64)
             cid = sub["__cid"].to_numpy()
+            vecs = sub["__cv"]
             invalid = None
             if anti_label:
-                cl = sub["__cl"]
-                ok = ~cl.isna().to_numpy()
-                if not ok.all():
-                    C, cid = C[ok], cid[ok]
-                    cl = cl[ok]
+                ok = ~sub["__cl"].isna().to_numpy()
+                cid, vecs, cl = cid[ok], vecs[ok], sub["__cl"][ok]
                 if len(cid) == 0:
                     return None
                 invalid = (qlab_arr[qsel, None]
                            == cl.to_numpy()[None, :])
-            Qb, qnb = Qm[qsel], (None if l2 else qn[qsel])
-            S = _gemm_pairs(Qb, C, l2=l2)
-            if not l2:
-                cn = np.sqrt(_row_sqnorms(C))
-                S /= qnb[:, None] * cn[None, :]
+            C, clen = _vec_matrix(vecs, cdtype)
+            S = _pair_scores(Q[qsel], qlen[qsel], C, clen, l2=l2)
             km = _keep_topk(S, k, margin, descending=not l2,
                             invalid=invalid)
             qi, ci = np.nonzero(km)
@@ -207,7 +271,7 @@ def _map_gemm_topk(qrows, qid_type, corpus: DataFrame, k: int,
                                  "__cid": cid[ci],
                                  out_score: S[qi, ci]})
 
-        all_q = np.arange(Qm.shape[0])
+        all_q = np.arange(len(qids))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -236,37 +300,22 @@ def _map_gemm_topk(qrows, qid_type, corpus: DataFrame, k: int,
     return scored
 
 
-def _vec_is_double(df: DataFrame, col: str) -> bool:
-    """The GEMM path only replaces folds over array<double> — the
-    only shape the kernels' bit-equality argument covers (a float
-    column would fold in float32 upstream of the double accumulate)."""
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    try:
-        t = df.schema[col].dataType
-    except Exception:
-        return False
-    return isinstance(t, ArrayType) and isinstance(t.elementType,
-                                                   DoubleType)
-
-
 def _cogroup_cosine_topk(q: DataFrame, c: DataFrame, k: int,
                          round_to: int | None, anti_label: bool,
                          ngroups: int) -> DataFrame:
     """Per-cell pair scoring as ONE FlatMapCoGroupsInPandas stage
-    (guide §4.2) replacing the per-pair fold on the __cell equi-join:
-    each cell's query block meets its corpus block as two Arrow
-    batches, scores come from the bit-identical GEMM kernels, and
-    only the per-(query, cell) top-k contenders (see _keep_topk) flow
-    back — |Q|·nprobe·~k rows instead of |Q|·nprobe·|cell| into the
-    rank window. Corpus rows are salted into ceil(parallelism/ngroups)
+    (guide §4.2): each cell's query block meets its corpus block as
+    two Arrow batches, scores come from _pair_scores, and only the
+    per-(query, cell) top-k contenders (see _keep_topk) flow back —
+    |Q|·nprobe·~k rows instead of |Q|·nprobe·|cell| into the rank
+    window. Corpus rows are salted into ceil(parallelism/ngroups)
     sub-groups (queries replicate to every salt — deterministic
     xxhash64 salt, guide §2.5) so few-celled local runs still use
     every core; at scale nlist is large and the salt collapses to 1.
     Expects columns (__qid, __qv [, __ql]) / (__cid, __cv [, __cl])
     plus __cell on both sides; emits (__qid, __cid, cosine) with
-    cosine = dot/(||q||·||c||) rounded to round_to, exactly the rows
-    the former join would feed the window for those pairs."""
+    cosine = dot/(||q||·||c||) rounded to round_to. With
+    `anti_label`, only pairs whose non-null labels differ score."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = q.sparkSession
@@ -280,6 +329,8 @@ def _cogroup_cosine_topk(q: DataFrame, c: DataFrame, k: int,
             "__gs", F.explode(F.array(*[F.lit(i) for i in range(nsalt)])))
         keys.append("__gs")
     margin = 0.0 if round_to is None else 2.0 * (10.0 ** -round_to)
+    qdtype = _elem_dtype(q.schema["__qv"])
+    cdtype = _elem_dtype(c.schema["__cv"])
     out_schema = StructType([
         StructField("__qid", q.schema["__qid"].dataType),
         StructField("__cid", c.schema["__cid"].dataType),
@@ -298,7 +349,7 @@ def _cogroup_cosine_topk(q: DataFrame, c: DataFrame, k: int,
 
         if anti_label:
             # NULL labels can neither agree nor disagree — excluded on
-            # both sides, exactly like the JVM inequality predicate
+            # both sides
             left = left[~left["__ql"].isna()]
             right = right[~right["__cl"].isna()]
         if len(left) == 0 or len(right) == 0:
@@ -307,17 +358,14 @@ def _cogroup_cosine_topk(q: DataFrame, c: DataFrame, k: int,
             codes = pd.factorize(pd.concat(
                 [left["__ql"], right["__cl"]], ignore_index=True))[0]
             qlab, clab = codes[:len(left)], codes[len(left):]
-        Q = np.array(left["__qv"].to_list(), dtype=np.float64)
-        C = np.array(right["__cv"].to_list(), dtype=np.float64)
-        qn = np.sqrt(_row_sqnorms(Q))
-        cn = np.sqrt(_row_sqnorms(C))
+        Q, qlen = _vec_matrix(left["__qv"], qdtype)
+        C, clen = _vec_matrix(right["__cv"], cdtype)
         qid = left["__qid"].to_numpy()
         cid = right["__cid"].to_numpy()
         outs = []
         step = max(1, _GEMM_BLOCK // max(C.shape[0], 1))
         for i in range(0, Q.shape[0], step):
-            S = _gemm_pairs(Q[i:i + step], C)
-            S /= qn[i:i + step, None] * cn[None, :]
+            S = _pair_scores(Q[i:i + step], qlen[i:i + step], C, clen)
             invalid = (qlab[i:i + step, None] == clab[None, :]
                        ) if anti_label else None
             keep = _keep_topk(S, k, margin, descending=True,
@@ -361,39 +409,19 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    queries is assumed small (it's broadcast); corpus is scanned once.
+    queries is assumed small (it's collected and shipped with every
+    scoring task); corpus is scanned once by one MapInPandas stage.
     Result columns are FIXED names (query_id, match_id, cosine, rank) so
     self-joins over the same table never collide; rank 1..k, ties broken
-    by match id for determinism. `round_to` rounds the score BEFORE
-    ranking — use it when results must be reproducible bit-for-bit
-    across engines/arithmetic orders (e.g. oracle checks). Norms are
-    materialized once per row on each side — never recomputed per pair."""
-    c = _spread(
-        corpus.select(F.col(corpus_id).alias("__cid"),
-                      F.col(corpus_vec).alias("__cv"))
-    )
-    if _vec_is_double(queries, query_vec) and _vec_is_double(
-            corpus, corpus_vec):
-        # Arrow-side GEMM scoring (guide §4.2): the query side was
-        # already driver-collected by the former F.broadcast; scores
-        # are bit-identical and the final window sees a provable
-        # superset of its winners — results unchanged.
-        qprep = queries.select(F.col(query_id).alias("__qid"),
-                               F.col(query_vec).alias("__qv"))
-        qrows = [(r["__qid"], r["__qv"]) for r in qprep.collect()]
-        scored = _map_gemm_topk(qrows, qprep.schema["__qid"].dataType,
-                                c, k, round_to)
-        return _rank_topk(scored, k)
-    q = F.broadcast(
-        queries.select(F.col(query_id).alias("__qid"),
-                       F.col(query_vec).alias("__qv"))
-        .withColumn("__qn", _norm(F.col("__qv")))
-    )
-    c = c.withColumn("__cn", _norm(F.col("__cv")))
-    cos = _dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = q.join(c).select(F.col("__qid"), F.col("__cid"), cos.alias("cosine"))
+    by match id for determinism; a null (undefined) cosine ranks last.
+    `round_to` rounds the score BEFORE ranking — use it when results
+    must be reproducible bit-for-bit across engines/arithmetic orders
+    (e.g. oracle checks)."""
+    qprep = queries.select(F.col(query_id).alias("__qid"),
+                           _vec_col(queries, query_vec, "__qv"))
+    c = _spread(corpus.select(F.col(corpus_id).alias("__cid"),
+                              _vec_col(corpus, corpus_vec, "__cv")))
+    scored = _map_gemm_topk(qprep.collect(), qprep.schema, c, k, round_to)
     return _rank_topk(scored, k)
 
 
@@ -411,23 +439,23 @@ def brute_force_l2_topk(
     dist, rank) — the ground truth for the PQ/IVFADC family, which
     approximates ||q − x||²; recall of an L2-metric index must be
     audited against L2 ground truth, not cosine (they rank
-    differently on unnormalized vectors). Same broadcast-queries /
-    one-corpus-scan shape as brute_force_topk."""
-    # both sides cast to array<double> -> the GEMM path's bit-equality
-    # argument always holds here (squared-L2 fold, ascending)
+    differently on unnormalized vectors). Same collected-queries /
+    one-corpus-scan shape as brute_force_topk; a null (undefined)
+    distance ranks last."""
+    # both sides cast to array<double>: the distance is the
+    # double-precision squared-L2 fold
     qprep = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(query_vec).cast("array<double>").alias("__qv"))
-    qrows = [(r["__qid"], r["__qv"]) for r in qprep.collect()]
     c = _spread(corpus.select(F.col(corpus_id).alias("__cid"),
                               F.col(corpus_vec).cast("array<double>")
                               .alias("__cv")))
-    scored = _map_gemm_topk(qrows, qprep.schema["__qid"].dataType,
-                            c, k, round_to, l2=True, out_score="dist")
+    scored = _map_gemm_topk(qprep.collect(), qprep.schema, c, k, round_to,
+                            l2=True, out_score="dist")
     scored = scored.select(F.col("__qid").alias("query_id"),
                            F.col("__cid").alias("match_id"), "dist")
     w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("match_id").asc())
+        F.col("dist").asc_nulls_last(), F.col("match_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "match_id", "dist", "rank"))
@@ -466,41 +494,21 @@ def hard_negatives(
     contrastive batches informative instead of trivially-separable
     random negatives.
 
-    Same scale shape as brute_force_topk (broadcast queries × one
-    corpus scan) with the label-mismatch predicate applied INSIDE
-    the join condition — same-label candidates never reach the
-    scoring projection or the rank window. NULL labels on either
+    Same scale shape as brute_force_topk (collected queries × one
+    corpus scan in one MapInPandas stage) with the label mismatch
+    applied as a mask INSIDE each scored batch — same-label
+    candidates never reach the rank window. NULL labels on either
     side are excluded (a null label can neither agree nor disagree
     with evidence). For corpus-scale query sets, use
     hard_negatives_ivf (IVF shortlist, no broadcast anywhere)."""
+    qprep = queries.select(F.col(query_id).alias("__qid"),
+                           _vec_col(queries, query_vec, "__qv"),
+                           F.col(query_label).alias("__ql"))
     c = _spread(corpus.select(F.col(corpus_id).alias("__cid"),
-                              F.col(corpus_vec).alias("__cv"),
+                              _vec_col(corpus, corpus_vec, "__cv"),
                               F.col(corpus_label).alias("__cl")))
-    if _vec_is_double(queries, query_vec) and _vec_is_double(
-            corpus, corpus_vec):
-        # Arrow-side GEMM with the label-mismatch mask applied inside
-        # the scoring batch (same exclusion as the join predicate —
-        # see _map_gemm_topk); results unchanged.
-        qprep = queries.select(F.col(query_id).alias("__qid"),
-                               F.col(query_vec).alias("__qv"),
-                               F.col(query_label).alias("__ql"))
-        qrows = [(r["__qid"], r["__qv"], r["__ql"])
-                 for r in qprep.collect()]
-        scored = _map_gemm_topk(qrows, qprep.schema["__qid"].dataType,
-                                c, k, round_to, anti_label=True)
-        return _rank_topk(scored, k)
-    q = F.broadcast(queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
-        F.col(query_label).alias("__ql"))
-        .withColumn("__qn", _norm(F.col("__qv"))))
-    c = c.withColumn("__cn", _norm(F.col("__cv")))
-    cos = _dot(F.col("__qv"), F.col("__cv")) \
-        / (F.col("__qn") * F.col("__cn"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = (q.join(c, F.col("__ql") != F.col("__cl"))
-              .select("__qid", "__cid", cos.alias("cosine")))
+    scored = _map_gemm_topk(qprep.collect(), qprep.schema, c, k, round_to,
+                            anti_label=True)
     return _rank_topk(scored, k)
 
 
@@ -530,17 +538,18 @@ def hard_negatives_ivf(
     Composition: corpus rows assign to their nearest cell of the
     coarse codebook (one pass, no corpus shuffle to the driver);
     queries explode to their `nprobe` nearest cells and meet the
-    corpus in a plain shuffled EQUI-JOIN on the cell id — no
-    broadcast anywhere, both sides scale out, per-cell work is
-    (|q|·nprobe/nlist)·(|c|/nlist) per cell instead of |q|·|c|. The
-    anti-label predicate rides WITH the join, so same-label
-    candidates are discarded before the rank window — which is why
-    NO over-fetch factor is needed: the k survivors come from every
-    different-label candidate in the probed cells, not from a
-    pre-truncated, same-label-diluted top list (the composition the
-    hard_negatives docstring names, made into an operator). NULL
-    labels never match the inequality, so they are excluded on both
-    sides, matching hard_negatives.
+    corpus per cell in ONE cogroup stage (_cogroup_cosine_topk) —
+    no broadcast anywhere, both sides scale out, per-cell work is
+    (|q|·nprobe/nlist)·(|c|/nlist) per cell instead of |q|·|c|, and
+    the cell key is salted so few-celled runs still spread. The
+    label mismatch is a mask inside each cell's scoring block, so
+    same-label candidates are discarded before the rank window —
+    which is why NO over-fetch factor is needed: the k survivors
+    come from every different-label candidate in the probed cells,
+    not from a pre-truncated, same-label-diluted top list (the
+    composition the hard_negatives docstring names, made into an
+    operator). NULL labels are excluded on both sides, matching
+    hard_negatives.
 
     Recall vs the brute-force miner is the usual IVF probed-cells
     trade — audit with topk_recall(hard_negatives_ivf(...),
@@ -549,19 +558,13 @@ def hard_negatives_ivf(
     (engine-replayable oracles); `round_to` rounds the cosine
     BEFORE ranking for cross-engine bit-stability. At 100 TB, pair
     with write_ivf_index so the corpus side partition-prunes to the
-    probed cells; if the planner falls back to a sort-merge join on
-    the (few-valued) cell id, pre-salt both sides with a
-    deterministic sub-key so the per-cell work spreads (the guide's
-    skew discipline) — at broadcastable query scale the planner
-    picks BHJ and the cell key never bottlenecks."""
+    probed cells."""
     if centroids is None:
         centroids = train_ivf_centroids(corpus, corpus_vec,
                                         corpus_id, nlist, iters)
-    gemm = (_vec_is_double(corpus, corpus_vec)
-            and _vec_is_double(queries, query_vec))
     c = _spread(corpus.select(
         F.col(corpus_id).alias("__cid"),
-        F.col(corpus_vec).alias("__cv"),
+        _vec_col(corpus, corpus_vec, "__cv"),
         F.col(corpus_label).alias("__cl"),
     )).withColumn("__cell", _nearest_centroid("__cv", centroids))
     probe = F.transform(
@@ -571,27 +574,11 @@ def hard_negatives_ivf(
     )
     q = _spread(queries.select(
         F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
+        _vec_col(queries, query_vec, "__qv"),
         F.col(query_label).alias("__ql"),
     )).withColumn("__cell", F.explode(probe))
-    if gemm:
-        # Arrow-side GEMM scoring with in-cell top-k pre-reduction
-        # (guide §4.2): bit-identical scores, identical final top-k —
-        # see _cogroup_cosine_topk. Replaces the interpreted per-pair
-        # fold that dominated this operator at sf1+ (round-11 audit).
-        scored = _cogroup_cosine_topk(q, c, k, round_to,
-                                      anti_label=True,
-                                      ngroups=len(centroids))
-        return _rank_topk(scored, k)
-    c = c.withColumn("__cn", _norm(F.col("__cv")))
-    q = q.withColumn("__qn", _norm(F.col("__qv")))
-    cos = (_dot(F.col("__qv"), F.col("__cv"))
-           / (F.col("__qn") * F.col("__cn")))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = (q.join(c, "__cell")
-              .filter(F.col("__ql") != F.col("__cl"))
-              .select("__qid", "__cid", cos.alias("cosine")))
+    scored = _cogroup_cosine_topk(q, c, k, round_to, anti_label=True,
+                                  ngroups=len(centroids))
     return _rank_topk(scored, k)
 
 
@@ -722,11 +709,13 @@ def ivf_topk(
 
     Corpus vectors are assigned to their nearest of `nlist` centroids
     (one pass, no shuffle of the corpus); each query probes its
-    `nprobe` nearest cells and runs exact cosine only there — an
-    nlist/nprobe scan reduction. At 100 TB, persist the corpus
-    partitioned/bucketed by `__cell` so probing partition-prunes and
-    the per-cell join is shuffle-free; centroids stay a broadcast
-    literal (nlist×dim floats).
+    `nprobe` nearest cells, and the one MapInPandas scoring stage
+    (_map_gemm_topk, keyed on the cell) runs exact cosine only on
+    (query, corpus-row) pairs in the same cell — an nlist/nprobe
+    reduction of the pairs scored. At 100 TB, persist the corpus
+    partitioned by `__cell` (write_ivf_index) so probing
+    partition-prunes the scan; centroids stay a broadcast literal
+    (nlist×dim floats).
 
     Pass `centroids` to skip training and use a fixed codebook (e.g. a
     seeded random quantizer) — makes the whole search deterministic
@@ -738,7 +727,7 @@ def ivf_topk(
 
     c = _spread(corpus.select(
         F.col(corpus_id).alias("__cid"),
-        F.col(corpus_vec).alias("__cv"),
+        _vec_col(corpus, corpus_vec, "__cv"),
     )).withColumn("__cell", _nearest_centroid("__cv", centroids))
     probe = F.transform(
         F.slice(F.reverse(F.array_sort(_centroid_scores(_qcol(query_vec), centroids))),
@@ -747,25 +736,11 @@ def ivf_topk(
     )
     qprep = queries.select(
         F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
+        _vec_col(queries, query_vec, "__qv"),
         F.explode(probe).alias("__cell"),
     )
-    if _vec_is_double(queries, query_vec) and _vec_is_double(
-            corpus, corpus_vec):
-        # Arrow-side GEMM; only (query, corpus) pairs in the same
-        # probed cell are scored (key mask == the former equi-join)
-        qrows = [(r["__qid"], r["__qv"], r["__cell"])
-                 for r in qprep.collect()]
-        scored = _map_gemm_topk(qrows, qprep.schema["__qid"].dataType,
-                                c, k, round_to, key_col="__cell")
-        return _rank_topk(scored, k)
-    q = F.broadcast(qprep.withColumn("__qn", _norm(F.col("__qv"))))
-    c = c.withColumn("__cn", _norm(F.col("__cv")))
-    cos = (_dot(F.col("__qv"), F.col("__cv"))
-           / (F.col("__qn") * F.col("__cn")))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = q.join(c, "__cell").select("__qid", "__cid", cos.alias("cosine"))
+    scored = _map_gemm_topk(qprep.collect(), qprep.schema, c, k, round_to,
+                            key_col="__cell")
     return _rank_topk(scored, k)
 
 
@@ -837,10 +812,13 @@ def search_ivf_index(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Top-k against a persisted IVF index. The probed cell set (small:
-    |queries| × nprobe distinct values) is collected so the cell filter
-    is STATIC — the parquet scan partition-prunes to just those
-    directories (visible as PartitionFilters in the plan)."""
+    """Top-k against a persisted IVF index. ONE collect of the probed
+    queries yields both the scoring closure and the probed cell set
+    (small: |queries| × nprobe distinct values), so the cell filter is
+    STATIC — the parquet scan partition-prunes to just those
+    directories (visible as PartitionFilters in the plan) — and the
+    cell-keyed MapInPandas stage (_map_gemm_topk) scores only
+    same-cell pairs."""
     centroids = [
         [float(x) for x in r["centroid"]]
         for r in spark.read.parquet(f"{path}/_centroids").orderBy("i").collect()
@@ -853,39 +831,18 @@ def search_ivf_index(
     )
     q_probed = queries.select(
         F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
+        _vec_col(queries, query_vec, "__qv"),
         F.explode(probe).alias("__cell"),
     )
+    qrows = q_probed.collect()
+    cells = sorted({r["__cell"] for r in qrows})
     corp = spark.read.parquet(path)
-    if _vec_is_double(queries, query_vec) and _vec_is_double(
-            corp, corpus_vec):
-        # ONE query collect yields both the static cell filter (the
-        # partition-pruning contract above) and the GEMM closure —
-        # the former separate distinct+collect job is gone
-        qrows = [(r["__qid"], r["__qv"], r["__cell"])
-                 for r in q_probed.collect()]
-        cells = sorted({r[2] for r in qrows})
-        c = _spread(
-            corp.filter(F.col("__cell").isin(cells))
-            .select(F.col(corpus_id).alias("__cid"),
-                    F.col(corpus_vec).alias("__cv"), "__cell"))
-        scored = _map_gemm_topk(
-            qrows, q_probed.schema["__qid"].dataType, c, k,
-            round_to=None, key_col="__cell")
-        return _rank_topk(scored, k)
-    q_probed = q_probed.withColumn("__qn", _norm(F.col("__qv")))
-    cells = sorted({r["__cell"] for r in q_probed.select("__cell").distinct().collect()})
     c = _spread(
         corp.filter(F.col("__cell").isin(cells))
-        .select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cv"),
-                "__cell")
-    ).withColumn("__cn", _norm(F.col("__cv")))
-    scored = F.broadcast(q_probed).join(c, "__cell").select(
-        "__qid",
-        "__cid",
-        (_dot(F.col("__qv"), F.col("__cv"))
-         / (F.col("__qn") * F.col("__cn"))).alias("cosine"),
-    )
+        .select(F.col(corpus_id).alias("__cid"),
+                _vec_col(corp, corpus_vec, "__cv"), "__cell"))
+    scored = _map_gemm_topk(qrows, q_probed.schema, c, k, round_to=None,
+                            key_col="__cell")
     return _rank_topk(scored, k)
 
 
@@ -928,29 +885,15 @@ def lsh_bucketed_topk(
 
     qprep = queries.select(
         F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
+        _vec_col(queries, query_vec, "__qv"),
         _bucket_expr(_qcol(query_vec), plane_mat).alias("__bucket"),
     )
     cb = _spread(corpus.select(
         F.col(corpus_id).alias("__cid"),
-        F.col(corpus_vec).alias("__cv"),
+        _vec_col(corpus, corpus_vec, "__cv"),
     )).withColumn("__bucket", _bucket_expr("__cv", plane_mat))
-    if _vec_is_double(queries, query_vec) and _vec_is_double(
-            corpus, corpus_vec):
-        # Arrow-side GEMM; the bucket key mask reproduces the former
-        # equi-join's pair set exactly
-        qrows = [(r["__qid"], r["__qv"], r["__bucket"])
-                 for r in qprep.collect()]
-        scored = _map_gemm_topk(qrows, qprep.schema["__qid"].dataType,
-                                cb, k, round_to, key_col="__bucket")
-        return _rank_topk(scored, k)
-    qb = F.broadcast(qprep.withColumn("__qn", _norm(F.col("__qv"))))
-    cb = cb.withColumn("__cn", _norm(F.col("__cv")))
-    cos = (_dot(F.col("__qv"), F.col("__cv"))
-           / (F.col("__qn") * F.col("__cn")))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = qb.join(cb, "__bucket").select("__qid", "__cid", cos.alias("cosine"))
+    scored = _map_gemm_topk(qprep.collect(), qprep.schema, cb, k, round_to,
+                            key_col="__bucket")
     return _rank_topk(scored, k)
 
 

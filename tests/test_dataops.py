@@ -4405,12 +4405,15 @@ def test_normalize_text_unicode_forms(spark):
 
 
 def test_gemm_kernels_bit_identical_to_folds(spark):
-    """The round-12 Arrow-side pair scoring (similarity._gemm_pairs /
+    """The Arrow-side pair scoring (similarity._gemm_pairs /
     _row_sqnorms) must be BIT-identical to the Catalyst HOF folds it
     replaces — the kernels accumulate left-associatively in element
-    order from a 0.0 seed, one IEEE multiply + one add per term,
-    exactly like aggregate(zip_with(...)). Checked via float.hex on
-    every pair (dot, squared-L2) and every row norm."""
+    order from a 0.0 seed, one multiply in the element type + one
+    float64 add per term, exactly like aggregate(zip_with(...)).
+    Checked via float.hex on every pair (dot, squared-L2) and every
+    row norm, for double x double, float x float (Spark multiplies
+    float*float in float32) and a double query against a float
+    corpus."""
     import numpy as np
 
     from seatunnel_spark.dataops.similarity import (_dot, _gemm_pairs,
@@ -4419,34 +4422,42 @@ def test_gemm_kernels_bit_identical_to_folds(spark):
 
     rng = np.random.default_rng(42)
     dim, nq, nc = 17, 6, 9
-    Q = rng.standard_normal((nq, dim)) * 37.5
-    C = rng.standard_normal((nc, dim)) * 0.03
-    qdf = spark.createDataFrame(
-        [(i, [float(x) for x in Q[i]]) for i in range(nq)],
-        "qid int, qv array<double>")
-    cdf = spark.createDataFrame(
-        [(j, [float(x) for x in C[j]]) for j in range(nc)],
-        "cid int, cv array<double>")
-    l2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"),
-                   lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    jvm = {(r["qid"], r["cid"]): (r["dot"], r["l2"])
-           for r in qdf.crossJoin(cdf).select(
-               "qid", "cid",
-               _dot(F.col("qv"), F.col("cv")).alias("dot"),
-               l2.alias("l2")).collect()}
-    dots = _gemm_pairs(Q, C)
-    dist = _gemm_pairs(Q, C, l2=True)
-    for i in range(nq):
-        for j in range(nc):
-            assert float(dots[i, j]).hex() == jvm[(i, j)][0].hex()
-            assert float(dist[i, j]).hex() == jvm[(i, j)][1].hex()
-    jvm_norms = {r["qid"]: r["n"] for r in qdf.select(
-        "qid", _norm(F.col("qv")).alias("n")).collect()}
-    norms = np.sqrt(_row_sqnorms(Q))
-    for i in range(nq):
-        assert float(norms[i]).hex() == jvm_norms[i].hex()
+    Q64 = rng.standard_normal((nq, dim)) * 37.5
+    C64 = rng.standard_normal((nc, dim)) * 0.03
+    for qt, ct in (("double", "double"), ("float", "float"),
+                   ("double", "float")):
+        Q = Q64.astype(np.float32 if qt == "float" else np.float64)
+        C = C64.astype(np.float32 if ct == "float" else np.float64)
+        qdf = spark.createDataFrame(
+            [(i, [float(x) for x in Q[i]]) for i in range(nq)],
+            f"qid int, qv array<{qt}>")
+        cdf = spark.createDataFrame(
+            [(j, [float(x) for x in C[j]]) for j in range(nc)],
+            f"cid int, cv array<{ct}>")
+        l2 = F.aggregate(
+            F.zip_with(F.col("qv"), F.col("cv"),
+                       lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, x: acc + x)
+        jvm = {(r["qid"], r["cid"]): (r["dot"], r["l2"])
+               for r in qdf.crossJoin(cdf).select(
+                   "qid", "cid",
+                   _dot(F.col("qv"), F.col("cv")).alias("dot"),
+                   l2.alias("l2")).collect()}
+        dots = _gemm_pairs(Q, C)
+        dist = _gemm_pairs(Q, C, l2=True)
+        for i in range(nq):
+            for j in range(nc):
+                assert float(dots[i, j]).hex() == jvm[(i, j)][0].hex(), \
+                    (qt, ct, i, j)
+                assert float(dist[i, j]).hex() == jvm[(i, j)][1].hex(), \
+                    (qt, ct, i, j)
+        for df, vc, idc, M in ((qdf, "qv", "qid", Q), (cdf, "cv", "cid", C)):
+            jvm_norms = {r[idc]: r["n"] for r in df.select(
+                idc, _norm(F.col(vc)).alias("n")).collect()}
+            norms = np.sqrt(_row_sqnorms(M))
+            for i in range(M.shape[0]):
+                assert float(norms[i]).hex() == jvm_norms[i].hex(), \
+                    (qt, ct, vc, i)
 
 
 def test_keep_topk_mask_is_superset_of_window_winners():
@@ -4512,3 +4523,167 @@ def test_sql_literal_helpers_nonfinite_and_quoting(spark):
                         vec_col="emb-col")
     got = {r["id"]: r["cluster"] for r in out.collect()}
     assert got == {1: 0, 2: 1}
+
+
+_UNDEFINED_VECTORS = {
+    "null vector": None,
+    "zero vector": [0.0, 0.0],
+    "NaN element": [float("nan"), 1.0],
+    "length mismatch": [1.0, 0.0, 2.0],
+}
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+@pytest.mark.parametrize("case", sorted(_UNDEFINED_VECTORS))
+def test_undefined_score_is_null_and_ranks_last(spark, elem, case):
+    """One contract for every pair whose cosine is undefined — a null
+    vector, lengths that differ, a zero norm, a NaN score — on float
+    and double vectors alike: the score is null and ranks after every
+    non-null score. Checked end to end through brute_force_topk and on
+    the kernels for a batch that mixes the bad row with good ones."""
+    import numpy as np
+
+    from seatunnel_spark.dataops.similarity import (_pair_scores,
+                                                    _vec_matrix)
+
+    good = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+    rows = good + [(9, _UNDEFINED_VECTORS[case])]
+    q = spark.createDataFrame([(0, [1.0, 0.1])],
+                              f"vec_id int, embedding array<{elem}>")
+    c = spark.createDataFrame(rows, f"vec_id int, embedding array<{elem}>")
+    got = [(r["rank"], r["match_id"], r["cosine"]) for r in
+           brute_force_topk(q, c, "vec_id", "vec_id", k=4)
+           .orderBy("rank").collect()]
+    assert [(r, m) for r, m, _ in got] == [(1, 1), (2, 3), (3, 2), (4, 9)]
+    assert [s is None for _, _, s in got] == [False, False, False, True]
+
+    dtype = "float32" if elem == "float" else "float64"
+    Q, qlen = _vec_matrix([[1.0, 0.1]], dtype)
+    C, clen = _vec_matrix([v for _, v in rows], dtype)
+    S = _pair_scores(Q, qlen, C, clen)
+    assert np.isnan(S).tolist() == [[False, False, False, True]]
+
+
+# brute_force_topk, hard_negatives, hard_negatives_ivf, ivf_topk,
+# search_ivf_index and lsh_bucketed_topk over array<float> vectors, as
+# the Catalyst folds scored them (rows: query_id, rank, match_id,
+# float.hex of the unrounded cosine). With nprobe=2 of 3 cells the IVF
+# searches find the brute-force neighbours.
+_FLOAT_TOPK = [
+    (0, 1, 0, '0x1.0000000000001p+0'),
+    (0, 2, 3, '0x1.f64f68112379fp-1'),
+    (0, 3, 6, '0x1.ef33480775606p-1'),
+    (1, 1, 1, '0x1.fffffffffffffp-1'),
+    (1, 2, 28, '0x1.f4db58f94a1bbp-1'),
+    (1, 3, 25, '0x1.e9b863865fc11p-1'),
+    (2, 1, 2, '0x1.fffffffffffffp-1'),
+    (2, 2, 5, '0x1.fcb807fba09f3p-1'),
+    (2, 3, 29, '0x1.f643c18b9f92fp-1'),
+]
+_FLOAT_HARD_NEGATIVES = [
+    (0, 1, 3, '0x1.f64f68112379fp-1'),
+    (0, 2, 9, '0x1.e4576554dc0d3p-1'),
+    (0, 3, 15, '0x1.b7d2fc64dab88p-1'),
+    (1, 1, 28, '0x1.f4db58f94a1bbp-1'),
+    (1, 2, 10, '0x1.c935117a6c57bp-1'),
+    (1, 3, 22, '0x1.c60ec03e8da9bp-1'),
+    (2, 1, 5, '0x1.fcb807fba09f3p-1'),
+    (2, 2, 29, '0x1.f643c18b9f92fp-1'),
+    (2, 3, 11, '0x1.d130ef733b87cp-1'),
+]
+_FLOAT_LSH = [
+    (0, 1, 0, '0x1.0000000000001p+0'),
+    (0, 2, 25, '0x1.3d5f4255d39a9p-2'),
+    (0, 3, 28, '0x1.0b44c20481e50p-2'),
+    (1, 1, 1, '0x1.fffffffffffffp-1'),
+    (1, 2, 28, '0x1.f4db58f94a1bbp-1'),
+    (1, 3, 25, '0x1.e9b863865fc11p-1'),
+    (2, 1, 2, '0x1.fffffffffffffp-1'),
+    (2, 2, 5, '0x1.fcb807fba09f3p-1'),
+]
+
+
+def test_ann_operators_float_vectors_pinned(spark, tmp_path):
+    """array<float> vectors score through the same Arrow kernels as
+    array<double> ones, multiplying in float32 like the folds did:
+    every ANN operator's unrounded output matches, bit for bit, the
+    rows the fold produced for the same input."""
+    from seatunnel_spark.dataops.similarity import (hard_negatives,
+                                                    hard_negatives_ivf,
+                                                    ivf_topk,
+                                                    search_ivf_index,
+                                                    write_ivf_index)
+
+    rows = []
+    for i in range(30):
+        v = [((i * 7 + d * 5) % 11 - 5) / 7.0 + (3.0 if d == i % 3 else 0.0)
+             for d in range(5)]
+        rows.append((i, v, None if i == 4 else i % 2))
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int")
+    q = df.filter("vec_id < 3")
+    cb = [[3.0 if d == c else 0.0 for d in range(5)] for c in range(3)]
+    path = str(tmp_path / "ivf")
+    write_ivf_index(df, path, centroids=cb)
+    outs = {
+        "brute_force_topk": (brute_force_topk(q, df, "vec_id", "vec_id",
+                                              k=3), _FLOAT_TOPK),
+        "hard_negatives": (hard_negatives(q, df, "vec_id", "vec_id", k=3),
+                           _FLOAT_HARD_NEGATIVES),
+        "hard_negatives_ivf": (hard_negatives_ivf(
+            q, df, "vec_id", "vec_id", k=3, nlist=3, nprobe=2,
+            centroids=cb), _FLOAT_HARD_NEGATIVES),
+        "ivf_topk": (ivf_topk(q, df, "vec_id", "vec_id", k=3, nlist=3,
+                              nprobe=2, centroids=cb), _FLOAT_TOPK),
+        "search_ivf_index": (search_ivf_index(spark, path, q, k=3,
+                                              nprobe=2), _FLOAT_TOPK),
+        "lsh_bucketed_topk": (lsh_bucketed_topk(q, df, "vec_id", "vec_id",
+                                                k=3, planes=2), _FLOAT_LSH),
+    }
+    for name, (out, want) in outs.items():
+        got = sorted((r["query_id"], r["rank"], r["match_id"],
+                      r["cosine"].hex()) for r in out.collect())
+        assert got == want, name
+
+
+_PORTABLE_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from seatunnel_spark.dataops.similarity import (brute_force_topk,
+                                                hard_negatives_ivf)
+from seatunnel_spark.session import get_spark
+
+spark = get_spark("portable-ann")
+rows = [(i, [float(i % 3 == d) + i / 100.0 for d in range(3)], i % 2)
+        for i in range(12)]
+df = spark.createDataFrame(
+    rows, "vec_id long, embedding array<double>, label int")
+q = df.filter("vec_id < 2")
+top = brute_force_topk(q, df, "vec_id", "vec_id", k=2).collect()
+neg = hard_negatives_ivf(q, df, "vec_id", "vec_id", k=2, nlist=3,
+                         nprobe=3, centroids=[[1.0, 0, 0], [0, 1.0, 0],
+                                              [0, 0, 1.0]]).collect()
+print("ROWS", len(top), len(neg))
+spark.stop()
+"""
+
+
+def test_ann_scoring_runs_without_package_on_worker_path(tmp_path):
+    """The scoring stages' Python workers must not need seatunnel_spark
+    on their path: run from a directory outside the repo with no
+    PYTHONPATH — the package is importable on the driver only — the
+    MapInPandas (brute_force_topk) and cogroup (hard_negatives_ivf)
+    shapes still return their rows."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "portable_ann.py"
+    script.write_text(_PORTABLE_SCRIPT.format(root=root))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert "ROWS 4 4" in proc.stdout, proc.stderr[-3000:]
