@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -242,6 +243,7 @@ def main() -> None:
     # keep the tail window clean: log4j WARN spew (WindowExec etc.)
     # must never share the capture budget with the result line
     spark.sparkContext.setLogLevel("ERROR")
+    settings = _settings(spark)
     qs = entry.queries()
 
     load_start = os.getloadavg()
@@ -280,7 +282,7 @@ def main() -> None:
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "runs": runs,
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        **settings,
     }
 
     # The round driver records only the LAST ~2000 chars of stdout and
@@ -310,6 +312,29 @@ def main() -> None:
     budget = int(os.environ.get("SPARK_GRAFT_TAIL_BUDGET", "1800"))
     sys.stdout.flush()
     print(_tail_line(result, timings, digest, budget))
+
+
+def _settings(spark) -> dict:
+    """The settings the timings were taken at, recorded next to them:
+    host cores, the session's parallelism, shuffle partitions and
+    driver heap (all derived from the host unless set), and the
+    commit measured."""
+    try:
+        commit = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            timeout=10).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        commit = None
+    sc = spark.sparkContext
+    return {
+        "cpus": os.cpu_count(),
+        "defaultParallelism": sc.defaultParallelism,
+        "spark.sql.shuffle.partitions":
+            spark.conf.get("spark.sql.shuffle.partitions"),
+        "spark.driver.memory": sc.getConf().get("spark.driver.memory"),
+        "commit": commit,
+    }
 
 
 def _tail_line(result: dict, timings: dict, digest: str,

@@ -37,11 +37,13 @@ from seatunnel_spark.dataops._cache import scoped_persist
 # convergence metrics), so they hint the state side broadcast
 # whenever it is measured ≤ this bound — scale-adaptive by
 # construction: a 100 TB frontier exceeds it and the hint turns off.
-# 1M rows of (id[, int]) ≈ a few tens of MB hashed, inside the same
-# 64 MB broadcast discipline session.py sets. Only used on loops
-# whose aggregates are order-insensitive (min/count/anti-join —
-# BFS/CC/k-core); hits/pagerank sum doubles, where a build-side flip
-# could perturb partial-sum order, and keep their planner strategy.
+# 1M rows of (id[, int]) ≈ a few tens of MB hashed, inside session.py's
+# 64 MB broadcast ceiling (a hint bypasses the threshold, so this row
+# bound does not follow the lower threshold a small heap gets). Only
+# used on loops whose aggregates are order-insensitive (min/count/
+# anti-join — BFS/CC/k-core); hits/pagerank sum doubles, where a
+# build-side flip could perturb partial-sum order, and keep their
+# planner strategy.
 _BCAST_ROWS = 1_000_000
 
 
@@ -293,6 +295,23 @@ def triangles_on_bucketed(spark, table: str,
     return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
+def _pointer_jump(prop: DataFrame, nv: int) -> tuple[DataFrame, int]:
+    """One connected-components shortcut step over the round's
+    propagated (node, component, __old) table: component <-
+    component(component), checkpointed, with the number of labels
+    that changed this round observed by the same job."""
+    ptr = prop.select(F.col("node").alias("__t"),
+                      F.col("component").alias("__jc"))
+    jc = F.coalesce(ptr["__jc"], prop["component"])
+    new = (prop.join(_bcast_if_small(ptr, nv),
+                     prop["component"] == ptr["__t"], "left")
+           .select(prop["node"], jc.alias("component"),
+                   (jc != prop["__old"]).alias("__chg")))
+    new, changed = _checkpoint_observed(
+        new, F.sum(F.col("__chg").cast("long")))
+    return new.drop("__chg"), changed
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -375,23 +394,12 @@ def connected_components(
                     F.col("component").alias("__old"))
             .persist()
         )
-        # pointer jump: component <- component(component). Every label
-        # is a node id, so the map is a |V|-row self-join.
-        ptr = prop.select(F.col("node").alias("__t"),
-                          F.col("component").alias("__jc"))
-        new = (
-            prop.join(_bcast_if_small(ptr, nv),
-                      prop["component"] == ptr["__t"], "left")
-            .select(prop["node"],
-                    F.coalesce(ptr["__jc"], prop["component"])
-                    .alias("component"),
-                    (F.coalesce(ptr["__jc"], prop["component"])
-                     != prop["__old"]).alias("__chg"))
-        )
-        new, changed = _checkpoint_observed(
-            new, F.sum(F.col("__chg").cast("long")))
-        prop.unpersist()
-        labels = new.drop("__chg")
+        try:
+            # pointer jump: component <- component(component). Every
+            # label is a node id, so the map is a |V|-row self-join.
+            labels, changed = _pointer_jump(prop, nv)
+        finally:
+            prop.unpersist()
         if changed == 0:
             break
     und.unpersist()
@@ -645,21 +653,10 @@ def connected_components_on_bucketed(
                     F.col("component").alias("__old"))
             .persist()
         )
-        ptr = prop.select(F.col("node").alias("__t"),
-                          F.col("component").alias("__jc"))
-        new = (
-            prop.join(_bcast_if_small(ptr, nv),
-                      prop["component"] == ptr["__t"], "left")
-            .select(prop["node"],
-                    F.coalesce(ptr["__jc"], prop["component"])
-                    .alias("component"),
-                    (F.coalesce(ptr["__jc"], prop["component"])
-                     != prop["__old"]).alias("__chg"))
-        )
-        new, changed = _checkpoint_observed(
-            new, F.sum(F.col("__chg").cast("long")))
-        prop.unpersist()
-        labels = new.drop("__chg")
+        try:
+            labels, changed = _pointer_jump(prop, nv)
+        finally:
+            prop.unpersist()
         if changed == 0:
             break
     return labels
@@ -796,37 +793,41 @@ def hits(
                  .groupBy(F.col("__dst").alias("node"))
                  .agg(F.sum("hub").alias("__a"))
                  .persist())
-        s_a = F.broadcast(a_raw.agg(F.sum("__a").alias("__s")))
-        # SPARSE half-steps (round-11): scores ride only the nodes the
-        # neighbor sum produced; absent nodes carry exactly 0.0 and a
-        # +0.0 term never changes an IEEE sum of non-negative scores,
-        # so every aggregate below is bit-identical to the former
-        # dense (nodes-joined) form — the dense fill happens ONCE at
-        # the end instead of twice per iteration.
-        auth = (a_raw.join(s_a)
-                .select("node",
-                        F.when(F.col("__s") > 0,
-                               F.round(F.col("__a")
-                                       / F.col("__s"), round_to))
-                        .otherwise(F.lit(0.0))
-                        .alias("auth"))
-                .localCheckpoint())
-        a_raw.unpersist()
+        try:
+            s_a = F.broadcast(a_raw.agg(F.sum("__a").alias("__s")))
+            # SPARSE half-steps (round-11): scores ride only the nodes the
+            # neighbor sum produced; absent nodes carry exactly 0.0 and a
+            # +0.0 term never changes an IEEE sum of non-negative scores,
+            # so every aggregate below is bit-identical to the former
+            # dense (nodes-joined) form — the dense fill happens ONCE at
+            # the end instead of twice per iteration.
+            auth = (a_raw.join(s_a)
+                    .select("node",
+                            F.when(F.col("__s") > 0,
+                                   F.round(F.col("__a")
+                                           / F.col("__s"), round_to))
+                            .otherwise(F.lit(0.0))
+                            .alias("auth"))
+                    .localCheckpoint())
+        finally:
+            a_raw.unpersist()
         h_raw = (e.join(auth.withColumnRenamed("node", "__dst"),
                         "__dst")
                  .groupBy(F.col("__src").alias("node"))
                  .agg(F.sum("auth").alias("__h"))
                  .persist())
-        s_h = F.broadcast(h_raw.agg(F.sum("__h").alias("__s")))
-        hub = (h_raw.join(s_h)
-               .select("node",
-                       F.when(F.col("__s") > 0,
-                              F.round(F.col("__h")
-                                      / F.col("__s"), round_to))
-                       .otherwise(F.lit(0.0))
-                       .alias("hub"))
-               .localCheckpoint())
-        h_raw.unpersist()
+        try:
+            s_h = F.broadcast(h_raw.agg(F.sum("__h").alias("__s")))
+            hub = (h_raw.join(s_h)
+                   .select("node",
+                           F.when(F.col("__s") > 0,
+                                  F.round(F.col("__h")
+                                          / F.col("__s"), round_to))
+                           .otherwise(F.lit(0.0))
+                           .alias("hub"))
+                   .localCheckpoint())
+        finally:
+            h_raw.unpersist()
     return (nodes.join(hub, "node", "left").join(auth, "node", "left")
             .select("node",
                     F.coalesce("hub", F.lit(0.0)).alias("hub"),

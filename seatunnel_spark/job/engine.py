@@ -8,7 +8,8 @@ the Spark scheduler are the execution/physical layers:
 
   * operator chaining        -> whole-stage codegen (free)
   * shuffle-edge insertion   -> Catalyst exchange planning (free)
-  * per-vertex parallelism   -> spark.sql.shuffle.partitions / AQE (free)
+  * per-vertex parallelism   -> spark.sql.shuffle.partitions (2 × the
+                                session's cores, session.py) / AQE (free)
   * checkpoint coordination  -> Structured Streaming checkpointLocation
 
 A batch DAG table that two or more sinks consume is persisted before

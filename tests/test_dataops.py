@@ -3656,6 +3656,64 @@ def test_hits_degenerate_inputs(spark):
     assert hits(empty, iters=1).count() == 0
 
 
+class _RoundFails(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("op, fail_at", [
+    ("connected_components", 2),             # round 1: prop is live
+    ("connected_components_on_bucketed", 2),  # round 1: prop is live
+    ("hits", 2),                             # auth half-step: a_raw
+    ("hits", 3),                             # hub half-step: h_raw
+])
+def test_loop_persists_released_when_a_round_raises(spark, monkeypatch,
+                                                     op, fail_at):
+    """A round that raises must not leave its intra-round persist
+    behind. The Nth localCheckpoint runs (so the round's persisted
+    frame is materialized) and then raises; inside a cache_scope,
+    which releases the operators' scoped edge frames, the session's
+    cache must be empty afterwards."""
+    from seatunnel_spark.dataops import cache_scope, graph
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cm.isEmpty()
+    path = [(str(i), str(i + 1)) for i in range(6)]
+    edges = spark.createDataFrame(path, ["src", "dst"])
+    frame_cls = type(edges)  # the classic DataFrame overrides the API's
+    real, calls = frame_cls.localCheckpoint, []
+
+    def local_checkpoint(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        calls.append(1)
+        if len(calls) == fail_at:
+            raise _RoundFails(f"localCheckpoint #{fail_at}")
+        return out
+
+    if op == "connected_components_on_bucketed":
+        graph.write_bucketed_edges(
+            edges.union(edges.select("dst", "src")), "cc_fail_edges",
+            num_buckets=4)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", local_checkpoint)
+    try:
+        with cache_scope(), pytest.raises(_RoundFails):
+            if op == "connected_components_on_bucketed":
+                graph.connected_components_on_bucketed(
+                    spark, "cc_fail_edges").collect()
+            elif op == "hits":
+                graph.hits(edges, iters=2).collect()
+            else:
+                graph.connected_components(edges).collect()
+        assert len(calls) == fail_at
+        # checked before the DROP TABLE below, which uncaches the
+        # frames that read the table
+        assert cm.isEmpty()
+    finally:
+        monkeypatch.undo()
+        spark.sql("DROP TABLE IF EXISTS cc_fail_edges")
+        spark.catalog.clearCache()
+
+
 def test_bloom_prefilter_join_equivalence_and_pruning(spark):
     """Bloom pre-filter join: (a) output identical to the plain inner
     join (no false negatives — the correctness contract); (b) the
