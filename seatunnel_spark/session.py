@@ -60,6 +60,13 @@ _DEFAULTS = {
     # unreadable (PARQUET_TYPE_ILLEGAL); read as long, convert at source.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
+    # Generated-code cache (default 100 classes). sim_topk,
+    # sim_hard_negatives_ivf and q_bfs_hops alone generate 95 distinct
+    # classes, so rerunning the three evicted and recompiled 44 of them
+    # with Janino every round, and the JIT then recompiled the reloaded
+    # classes while the next op ran. At 1000, none is recompiled after
+    # the first round. Static: read when the JVM's first session starts.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 _MB = 1024 * 1024

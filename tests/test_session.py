@@ -1,8 +1,9 @@
 """Host-derived session defaults (seatunnel_spark.session).
 
 `host_defaults` is table-tested without Spark; the live test session
-is checked for the derived shuffle-partition count and for an
-`extra_conf` value winning over it."""
+is checked for the derived shuffle-partition count, for an
+`extra_conf` value winning over it, and for a generated-code cache
+that outlasts a rerun of more than Spark's default 100 classes."""
 
 import os
 
@@ -69,3 +70,25 @@ def test_extra_conf_overrides_derived_partitions(spark):
         assert s.conf.get(key) == "3"
     finally:
         spark.conf.set(key, before)
+
+
+def _janino_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_outlasts_a_rerun_of_many_queries(spark):
+    """A rerun of more queries than Spark's default cache (100 classes)
+    holds reuses every generated class instead of recompiling it."""
+    from pyspark.sql import functions as F
+
+    def run_all():
+        for i in range(120):  # each literal makes its own class
+            spark.range(3).select((F.col("id") * i + i).alias("x")).collect()
+
+    before = _janino_compiles(spark)
+    run_all()
+    first = _janino_compiles(spark) - before
+    run_all()
+    assert first > 100
+    assert _janino_compiles(spark) - before == first
