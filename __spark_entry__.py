@@ -23,6 +23,17 @@ TABLES = [
 ]
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    # read_files reuses the schema of an unchanged input instead of
+    # running a schema-inference job per read; a seatunnel_spark that
+    # predates it reads the plain way.
+    try:
+        from seatunnel_spark.sources.file import read_files
+    except ImportError:
+        return spark.read.parquet(path)
+    return read_files(spark, "parquet", path)
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS); Spark 4 rejects it unless
@@ -32,13 +43,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong",
                           "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _register(spark: SparkSession, sf_dir: str, *names: str) -> None:

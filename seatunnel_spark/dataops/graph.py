@@ -337,9 +337,9 @@ def connected_components(
     (the distinct) and then only ever probed on its persisted
     partitioning. Convergence is a changed-label flag computed INSIDE
     the round's projection (the pre-round label rides along as a
-    column) probed by one short-circuiting limit(1) action — no
-    extra new-vs-old join per round; `max_iter` is a backstop, not a
-    tuning knob.
+    column), summed as a metric observed by the round's checkpoint
+    job (_checkpoint_observed) — no extra new-vs-old join and no probe
+    job per round; `max_iter` is a backstop, not a tuning knob.
 
     Lineage discipline: the per-round label table is localCheckpoint-ed
     (eager). The pointer-jump SELF-join doubles the logical plan every
@@ -516,10 +516,11 @@ def k_core(
     initial distinct. Truncating on the small side is mandatory, not
     a style choice: a self-referencing degree table grows the logical
     plan exponentially in rounds (measured: an 11-round peel exceeded
-    the 2 GB plan-string limit). Convergence is one bounded count per
-    round; `max_iter` is a backstop — rounds are worst-case O(|V|) on
-    a path graph but single digits on real graphs (11 at sf0.01 for
-    the co-purchase graph)."""
+    the 2 GB plan-string limit). Convergence is the number of vertices
+    the next round drops, observed by the round's checkpoint job
+    (_checkpoint_observed) — no probe job; `max_iter` is a backstop —
+    rounds are worst-case O(|V|) on a path graph but single digits on
+    real graphs (11 at sf0.01 for the co-purchase graph)."""
     und = scoped_persist(_symmetrized(edges, src, dst, dedupe))
     return _kcore_peel(und, k, max_iter)
 
@@ -861,10 +862,11 @@ def bfs_hops(
     runs measured it 188.7 s vs 145.7 s for this form (+30%) — the
     anti-join against one consolidated checkpointed frame beats N
     per-layer cached scans unioned per round. Convergence = empty
-    frontier, one bounded count per round; `max_hops` bounds the
-    worst case. BFS layers are schedule-independent, so the converged
-    (node, hops) labeling is unique and the oracle replays it as a
-    recursive min-hops CTE."""
+    frontier: the new layer's size is observed by the round's visited
+    checkpoint job (_checkpoint_observed), with no probe job;
+    `max_hops` bounds the worst case. BFS layers are
+    schedule-independent, so the converged (node, hops) labeling is
+    unique and the oracle replays it as a recursive min-hops CTE."""
     e = edges.select(F.col(src).alias("__src"),
                      F.col(dst).alias("__dst"))
     if dedupe:

@@ -16,6 +16,11 @@ source — the parts the reference hand-rolls in *ReadStrategy.java.
 
 from __future__ import annotations
 
+import glob
+import os
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 
 from seatunnel_spark.sources.base import Source
@@ -51,8 +56,6 @@ def resolve_path_aliases(path: str) -> str:
     written for a container filesystem (the reference's e2e confs read
     /seatunnel/read/...) run unmodified outside it. Longest prefix
     wins; driver-side only (Spark resolves file paths on the driver)."""
-    import os
-
     aliases = os.environ.get("SEATUNNEL_SPARK_PATH_ALIASES", "")
     if not aliases:
         return path
@@ -64,6 +67,75 @@ def resolve_path_aliases(path: str) -> str:
         if path == prefix or path.startswith(prefix.rstrip("/") + "/"):
             return target + path[len(prefix):]
     return path
+
+
+def _local_files(path: str) -> list[tuple[str, int, int, int]]:
+    """(path, size, st_mtime_ns, inode) of every file the local path or
+    glob `path` names, directories walked recursively, sorted; empty
+    when nothing matches. An entry that cannot be stat-ed (a dangling
+    link) is still listed, with size -1."""
+    out = []
+    for m in glob.glob(path):
+        if os.path.isfile(m):
+            names = [m]
+        else:
+            names = [os.path.join(r, n) for r, _d, ns in os.walk(m)
+                     for n in ns]
+        for name in names:
+            try:
+                st = os.stat(name)
+            except OSError:
+                out.append((name, -1, 0, 0))
+            else:
+                out.append((name, st.st_size, st.st_mtime_ns, st.st_ino))
+    return sorted(out)
+
+
+# Inferring a parquet/orc schema reads file footers, and for parquet
+# Spark runs a job for it even when it reads one footer. A read of
+# unchanged inputs gets the schema the previous read inferred.
+_SCHEMA_CACHE_SIZE = 256
+_schema_cache: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def read_files(spark: SparkSession, fmt: str, path: str,
+               options: dict | None = None, schema=None,
+               files: list | None = None) -> DataFrame:
+    """spark.read.format(fmt).options(**options).load(path), with the
+    schema of a parquet or orc read without a declared `schema` reused
+    from an earlier read of the same inputs. The cache key is the
+    format, the path, the options, the session's SQL conf and the
+    listing of the files (path, size, mtime, inode), so a rewritten,
+    added or removed file or a changed conf infers again. Remote and
+    glob paths (Hadoop glob characters), and formats whose inference
+    scans the data (csv, json), always infer. `files` is
+    `_local_files(path)` when the caller already has it."""
+    options = options or {}
+    reader = spark.read.format(fmt).options(**options)
+    if schema is not None:
+        return reader.schema(schema).load(path)
+    if fmt not in ("parquet", "orc") or "://" in path \
+            or any(c in path for c in "*?[{"):
+        return reader.load(path)
+    if files is None:
+        files = _local_files(path)
+    if not files:  # not a local path this process can list
+        return reader.load(path)
+    key = (fmt, path, tuple(sorted((k, str(v)) for k, v in options.items())),
+           spark._jsparkSession.conf().getAll().toString(), tuple(files))
+    with _schema_lock:
+        cached = _schema_cache.get(key)
+        if cached is not None:
+            _schema_cache.move_to_end(key)
+    if cached is not None:
+        return reader.schema(cached).load(path)
+    df = reader.load(path)
+    with _schema_lock:
+        _schema_cache[key] = df.schema
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return df
 
 
 # Hive-style nested separators (TextFormatConstant.SEPARATOR; the CSV
@@ -206,29 +278,18 @@ class FileSource(Source):
             path = scheme + path.lstrip("/") if scheme.endswith("//") else scheme + path
         return path
 
-    def _glob_has_suffix(self, suffix: str) -> bool:
-        """True when the (local) source path resolves to at least one file
-        with the given suffix — a driver-side metadata peek (listing only,
-        never reads data), mirroring Hadoop's CompressionCodecFactory
-        suffix dispatch. Remote schemes return False: their read paths
-        declare compress_codec explicitly."""
-        import glob as _glob
-        import os
-
+    def _files(self) -> list | None:
+        """`_local_files` of the source path; None for a remote path or
+        a Hive table read. One walk serves the empty-input check, the
+        .lzo suffix probe and the schema cache key."""
+        if self.plugin_name == "Hive" and self.opt("table_name"):
+            return None
         p = self._path()
-        if "://" in p:
-            return False
-        for m in _glob.glob(p) or [p]:
-            if os.path.isfile(m):
-                if m.endswith(suffix):
-                    return True
-            elif os.path.isdir(m):
-                for _r, _d, names in os.walk(m):
-                    if any(n.endswith(suffix) for n in names):
-                        return True
-        return False
+        return None if "://" in p else _local_files(p)
 
-    def _reader(self, reader):
+    def _read_spec(self) -> tuple[str, object, dict]:
+        """(Spark format, declared schema or None, reader options) of a
+        plain DataFrameReader read of this source."""
         fmt = str(self.opt("file_format_type", "parquet")).lower()
         if fmt not in _FORMATS:
             raise ValueError(f"unknown file_format_type {fmt!r}")
@@ -238,25 +299,26 @@ class FileSource(Source):
                 "excel streaming read is not supported; use batch mode"
             )
         fields_opt = _schema_fields(self.opt("schema"))
-        if fields_opt:
-            reader = reader.schema(parse_schema(fields_opt))
+        options = {}
         if fmt == "csv":
-            reader = reader.option("header", self.opt("skip_header_row_number", 0) != 0 or
-                                   str(self.opt("header", "true")))
-            reader = reader.option("sep", self.opt("field_delimiter", ","))
-            if not schema_opt:
-                reader = reader.option("inferSchema", "true")
-        if fmt == "text" and self.opt("field_delimiter"):
-            # Delimited text: read lines then split downstream; the engine's
-            # Sql/Split transforms handle projection.
-            pass
+            options["header"] = (self.opt("skip_header_row_number", 0) != 0
+                                 or str(self.opt("header", "true")))
+            options["sep"] = self.opt("field_delimiter", ",")
+            if not fields_opt:
+                options["inferSchema"] = "true"
         if fmt == "xml":
-            reader = reader.option("rowTag", self.opt("xml_row_tag", "row"))
+            options["rowTag"] = self.opt("xml_row_tag", "row")
         if self.opt("encoding") and fmt in ("json", "csv"):
-            reader = reader.option("encoding", str(self.opt("encoding")))
-        for k, v in (self.opt("options") or {}).items():
-            reader = reader.option(k, v)
-        return reader.format(spark_fmt)
+            options["encoding"] = str(self.opt("encoding"))
+        options.update(self.opt("options") or {})
+        schema = parse_schema(fields_opt) if fields_opt else None
+        return spark_fmt, schema, options
+
+    def _reader(self, reader):
+        spark_fmt, schema, options = self._read_spec()
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.format(spark_fmt).options(**options)
 
     def _time_fmts(self) -> dict:
         # BaseSourceConfigOptions date/time read formats
@@ -407,36 +469,17 @@ class FileSource(Source):
         # Hive reads metastore tables (docs/en/connector-v2/source/Hive.md
         # `table_name = db.tbl`); file backends read paths.
         fmt = str(self.opt("file_format_type", "parquet")).lower()
-        schema_opt = self.opt("schema")
-        fields_opt = _schema_fields(schema_opt)
-        if self.plugin_name != "Hive":
+        fields_opt = _schema_fields(self.opt("schema"))
+        files = self._files()
+        if self.plugin_name != "Hive" and files == []:
             # Empty/missing directory reads produce an empty result
             # (LocalFileIT.java:350-353 "test read empty directory"),
             # not a scan error.
-            import glob as _glob
-            import os
+            from pyspark.sql import types as T
 
-            def _no_files(path: str) -> bool:
-                matches = _glob.glob(path)
-                if not matches:
-                    return True
-                for m in matches:
-                    if os.path.isfile(m):
-                        return False
-                    for _r, _d, names in os.walk(m):
-                        if names:
-                            return False
-                return True
-
-            p = self._path()
-            if "://" not in p and _no_files(p):
-                from pyspark.sql import types as T
-
-                from seatunnel_spark.types import parse_schema as _ps
-
-                schema = (_ps(fields_opt) if fields_opt
-                          else T.StructType([]))
-                return spark.createDataFrame([], schema)
+            schema = (parse_schema(fields_opt) if fields_opt
+                      else T.StructType([]))
+            return spark.createDataFrame([], schema)
         codec = str(self.opt("archive_compress_codec", "none")).lower()
         if str(self.opt("compress_codec", "")).lower() == "lzo":
             # lzop-framed text/json (compress_codec = "lzo"): Hadoop has
@@ -449,8 +492,9 @@ class FileSource(Source):
             # never declare compress_codec even when the paired sink conf
             # wrote .lzo parts (TextReadStrategy.java:83-94 defaults to
             # NONE, making the reference pair latent-broken). Suffix
-            # detection is the behavior a user actually wants.
-            if self._glob_has_suffix(".lzo"):
+            # detection is the behavior a user actually wants. Remote
+            # paths declare compress_codec explicitly.
+            if any(f[0].endswith(".lzo") for f in files or ()):
                 codec = "lzo"
         encoding = str(self.opt("encoding", "utf-8"))
         skip = int(self.opt("skip_header_row_number", 0) or 0)
@@ -557,7 +601,7 @@ class FileSource(Source):
             from pyspark.sql import types as T
 
             schema = _ps(fields_opt)
-            df = spark.read.format(fmt).load(self._path())
+            df = read_files(spark, fmt, self._path(), files=files)
             phys = {f.name: f.dataType for f in df.schema.fields}
 
             def cast_to(name, dst):
@@ -630,7 +674,6 @@ class FileSource(Source):
                 # bounded archive fixtures to a spool first (gz/bzip2
                 # decompress natively by extension)
                 import atexit
-                import glob as _glob
                 import io
                 import shutil
                 import tarfile
@@ -639,7 +682,7 @@ class FileSource(Source):
 
                 spool = tempfile.mkdtemp(prefix="st_xml_arch_")
                 atexit.register(shutil.rmtree, spool, ignore_errors=True)
-                hits = [p for p in _glob.glob(xml_path)
+                hits = [p for p in glob.glob(xml_path)
                         if os.path.isfile(p)] or [
                     os.path.join(r, n)
                     for r, _d, ns in os.walk(xml_path) for n in ns]
@@ -784,7 +827,9 @@ class FileSource(Source):
                 F.lit(0).cast("long").alias("partIndex"),
             )
         else:
-            df = self._reader(spark.read).load(self._path())
+            spark_fmt, schema, options = self._read_spec()
+            df = read_files(spark, spark_fmt, self._path(), options, schema,
+                            files)
         if self.opt("read_columns"):
             # Projection applies to FILE columns; partition-path fields
             # (name=x/hobby=y dirs) stay appended, as the reference's

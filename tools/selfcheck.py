@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, ahead of any installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon(v) -> str:
