@@ -302,6 +302,7 @@ def _synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dataops/multimodal.py: synthesize_wav/synthesize_mp4)."""
     import pyspark.sql.types as T
 
+    from seatunnel_spark._pyworker import map_in_pandas
     from seatunnel_spark.dataops.multimodal import (synthesize_mp4,
                                                     synthesize_wav)
 
@@ -326,7 +327,7 @@ def _synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
                             for i in ids]
             yield pdf
 
-    return docs.mapInPandas(gen, schema=schema)
+    return map_in_pandas(docs, gen, schema=schema)
 
 
 def mm_av_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,6 +359,9 @@ def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     g//32, so the oracle replays the formula without any decoder."""
     import pyspark.sql.types as T
 
+    from seatunnel_spark._pyworker import map_in_pandas
+    from seatunnel_spark.dataops.png_codec import encode_png
+
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 100).select("doc_id")
 
@@ -369,8 +373,6 @@ def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gen(batches):
         import numpy as np
 
-        from seatunnel_spark.dataops.png_codec import encode_png
-
         for pdf in batches:
             ids = [int(i) for i in pdf["doc_id"]]
             pdf["content"] = [
@@ -381,7 +383,7 @@ def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from seatunnel_spark.dataops.multimodal import image_features
 
-    out = image_features(docs.mapInPandas(gen, schema=schema),
+    out = image_features(map_in_pandas(docs, gen, schema=schema),
                          "content", codec="png")
     return out.select(
         "doc_id",

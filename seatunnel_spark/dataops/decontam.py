@@ -18,9 +18,13 @@ territory.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
+import pandas as pd  # module-level so vectorized_udf type hints resolve
 
 from pyspark.sql import DataFrame, functions as F
+
+from seatunnel_spark._pyworker import ship_by_value, vectorized_udf
+
+ship_by_value(__name__)
 
 
 def word_ngrams(text: F.Column, n: int) -> F.Column:
@@ -136,13 +140,12 @@ def flag_contaminated_bloom(docs: DataFrame, bench: DataFrame,
     clean data instead of every corpus gram.
     """
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     spark = docs.sparkSession
     bitmap, nb, k = benchmark_bloom(bench, text_col, n, num_bits, num_probes)
     bc = spark.sparkContext.broadcast(bitmap)
 
-    @pandas_udf("boolean")
+    @vectorized_udf("boolean")
     def bloom_test(pos: pd.DataFrame) -> pd.Series:
         bm = bc.value
         ok = np.ones(len(pos), dtype=bool)

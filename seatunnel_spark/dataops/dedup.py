@@ -42,8 +42,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from seatunnel_spark._pyworker import ship_by_value, vectorized_udf
 from seatunnel_spark.dataops._cache import qcol as _qcol
 from seatunnel_spark.dataops._cache import scoped_persist
+
+ship_by_value(__name__)
 
 def _cap_buckets(df: DataFrame, keys: list[str],
                  max_bucket: int | None) -> DataFrame:
@@ -324,7 +327,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     import hashlib
 
-    @F.pandas_udf(T.LongType())
+    @vectorized_udf(T.LongType())
     def _simhash(texts):
         import numpy as np
         import pandas as pd

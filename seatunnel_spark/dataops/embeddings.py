@@ -28,7 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from seatunnel_spark._pyworker import map_in_pandas, ship_by_value
 from seatunnel_spark.dataops._cache import qcol as _qcol
+
+ship_by_value(__name__)
 
 
 def quantize_int8(df: DataFrame, vec_col: str = "embedding",
@@ -209,9 +212,9 @@ def _cov_partials(df: DataFrame, vec_col: str) -> DataFrame:
             yield pd.DataFrame({"n": [n], "s": [s.tolist()],
                                 "ss": [ss.ravel().tolist()]})
 
-    return df.select(vec_col).mapInPandas(
-        part, "n long, s array<double>, ss array<double>") \
-        .localCheckpoint()
+    return map_in_pandas(
+        df.select(vec_col), part,
+        "n long, s array<double>, ss array<double>").localCheckpoint()
 
 
 def _cov_from_partials(partials: DataFrame, round_to: int) -> DataFrame:

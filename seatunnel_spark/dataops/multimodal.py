@@ -22,6 +22,14 @@ import hashlib
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas, ship_by_value
+from seatunnel_spark.dataops.png_codec import (UnsupportedPng, decode_png,
+                                               encode_png,
+                                               gray8_histogram_feature,
+                                               is_png, resize_nearest)
+
+ship_by_value(__name__)
+
 IMAGE_META = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
@@ -87,22 +95,18 @@ def _decode_image_pil(content: bytes) -> tuple[int, int, str, list[float]]:
 def _decode_image_png(content: bytes) -> tuple[int, int, str, list[float]]:
     """Stdlib PNG path (dataops/png_codec.py — real decode, no deps):
     full chunk/inflate/unfilter decode + 8-bin grayscale histogram."""
-    from seatunnel_spark.dataops import png_codec
-
-    img = png_codec.decode_png(content)
+    img = decode_png(content)
     h, w = img.shape[:2]
-    return w, h, "png", png_codec.gray8_histogram_feature(img)
+    return w, h, "png", gray8_histogram_feature(img)
 
 
 def _decode_image_auto(content: bytes) -> tuple[int, int, str, list[float]]:
-    from seatunnel_spark.dataops import png_codec
-
     if _pil_available():
         return _decode_image_pil(content)
-    if png_codec.is_png(content):
+    if is_png(content):
         try:
             return _decode_image_png(content)
-        except png_codec.UnsupportedPng:
+        except UnsupportedPng:
             pass
     return _decode_image_stub(content)
 
@@ -150,7 +154,7 @@ def image_features(df: DataFrame, content_col: str = "content",
             pdf["image_feat"] = feats
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def image_resize(df: DataFrame, width: int, height: int,
@@ -170,8 +174,6 @@ def image_resize(df: DataFrame, width: int, height: int,
     )
 
     def run(batches):
-        from seatunnel_spark.dataops import png_codec
-
         use_pil = (codec == "pil"
                    or (codec == "auto" and _pil_available()))
         for pdf in batches:
@@ -190,11 +192,11 @@ def image_resize(df: DataFrame, width: int, height: int,
                     metas.append({"width": width, "height": height,
                                   "format": "png"})
                 elif (codec in ("auto", "png")
-                      and png_codec.is_png(src)):
+                      and is_png(src)):
                     # stdlib path: real decode -> nearest resize -> PNG
-                    resized = png_codec.resize_nearest(
-                        png_codec.decode_png(src), width, height)
-                    out_bytes.append(png_codec.encode_png(resized))
+                    resized = resize_nearest(decode_png(src), width,
+                                             height)
+                    out_bytes.append(encode_png(resized))
                     metas.append({"width": width, "height": height,
                                   "format": "png"})
                 else:
@@ -208,7 +210,7 @@ def image_resize(df: DataFrame, width: int, height: int,
             pdf["resized_meta"] = metas
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def _dhash64_from_gray(gray) -> int:
@@ -239,10 +241,8 @@ def _phash_pil(content: bytes) -> int:
 
 
 def _phash_png(content: bytes) -> int:
-    from seatunnel_spark.dataops import png_codec
-
-    img = png_codec.decode_png(content)
-    small = png_codec.resize_nearest(img, 9, 8)
+    img = decode_png(content)
+    small = resize_nearest(img, 9, 8)
     gray = [[int(small[y][x].mean()) if small.ndim == 3
              else int(small[y][x]) for x in range(9)] for y in range(8)]
     return _dhash64_from_gray(gray)
@@ -267,14 +267,12 @@ def _pick_phash(codec: str):
         return _phash_png
 
     def _auto(content: bytes) -> int:
-        from seatunnel_spark.dataops import png_codec
-
         if _pil_available():
             return _phash_pil(content)
-        if png_codec.is_png(content):
+        if is_png(content):
             try:
                 return _phash_png(content)
-            except png_codec.UnsupportedPng:
+            except UnsupportedPng:
                 pass
         return _phash_stub(content)
 
@@ -315,7 +313,7 @@ def image_phash64(df: DataFrame, content_col: str = "content",
             ]
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def image_near_dups(df: DataFrame, id_col: str = "path",
@@ -371,7 +369,7 @@ def audio_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
             ]
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def frame_sample_plan(df: DataFrame, meta_col: str = "audio_meta",
@@ -466,7 +464,7 @@ def video_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
             ]
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 # --------------------------------------------------------------------------

@@ -23,6 +23,10 @@ import zlib
 
 import numpy as np
 
+from seatunnel_spark._pyworker import ship_by_value
+
+ship_by_value(__name__)
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 

@@ -34,18 +34,14 @@ per-pair score is m lookups and distances stay bit-identical.
 
 from __future__ import annotations
 
-import sys
-
-from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from seatunnel_spark._pyworker import (apply_in_pandas, map_in_pandas,
+                                      ship_by_value)
 from seatunnel_spark.dataops._cache import ensure_parallelism as _ensure
 from seatunnel_spark.dataops._cache import qcol as _qcol
 
-# The scoring closures run in Python workers and call this module's
-# kernels. Shipping the module's functions by value lets them run on a
-# worker that cannot import seatunnel_spark.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
+ship_by_value(__name__)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -293,7 +289,7 @@ def _map_gemm_topk(qrows, qschema, corpus: DataFrame, k: int,
         cols.append("__cl")
     if key_col is not None:
         cols.append(key_col)
-    scored = corpus.select(*cols).mapInPandas(_score, out_schema)
+    scored = map_in_pandas(corpus.select(*cols), _score, out_schema)
     if round_to is not None:
         scored = scored.withColumn(out_score,
                                    F.round(out_score, round_to))
@@ -376,8 +372,8 @@ def _cogroup_cosine_topk(q: DataFrame, c: DataFrame, k: int,
                                       "cosine": S[qi, ci]}))
         return pd.concat(outs) if outs else _empty()
 
-    scored = (q.groupBy(*keys).cogroup(c.groupBy(*keys))
-              .applyInPandas(_score, out_schema))
+    scored = apply_in_pandas(q.groupBy(*keys).cogroup(c.groupBy(*keys)),
+                             _score, out_schema)
     if round_to is not None:
         scored = scored.withColumn("cosine", F.round("cosine", round_to))
     return scored

@@ -7,11 +7,15 @@ in the hot path, so they run at scan speed on any corpus size.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
+import pandas as pd  # module-level so vectorized_udf type hints resolve
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from seatunnel_spark._pyworker import (map_in_pandas, ship_by_value,
+                                      vectorized_udf)
 from seatunnel_spark.dataops._cache import scoped_persist
+
+ship_by_value(__name__)
 
 # --------------------------------------------------------------------------
 # token counting
@@ -573,7 +577,7 @@ def heavy_hitters(df: DataFrame, text_col: str = "text",
                 counts = {t: c - cut for t, c in counts.items() if c > cut}
         yield pd.DataFrame({"token": list(counts.keys())})
 
-    candidates = tokens.mapInPandas(mg_partition, cand_schema).distinct()
+    candidates = map_in_pandas(tokens, mg_partition, cand_schema).distinct()
     return (tokens
             .join(F.broadcast(candidates), "token", "left_semi")
             .groupBy("token")
@@ -1175,12 +1179,10 @@ def normalize_text(df: DataFrame, text_col: str = "text",
     pass through. Note DuckDB replays only NFC (nfc_normalize), so
     the strict oracle path pins form='NFC'; other forms are covered
     by unit tests against unicodedata itself."""
-    from pyspark.sql.functions import pandas_udf
-
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
 
-    @pandas_udf("string")
+    @vectorized_udf("string")
     def _norm(s: pd.Series) -> pd.Series:
         import unicodedata
 

@@ -23,6 +23,7 @@ import json
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.types import ROW_KIND_COL, parse_schema
 
 
@@ -411,7 +412,7 @@ def decode_protobuf(df: DataFrame, schema_opt, descriptor_file: str | None = Non
                 yield (pd.DataFrame.from_records(recs, columns=names)
                        if recs else pd.DataFrame({n: [] for n in names}))
 
-        return (df.select(F.col("value")).mapInPandas(run, schema)
+        return (map_in_pandas(df.select(F.col("value")), run, schema)
                 .withColumn(ROW_KIND_COL, F.lit("+I")))
 
     from pyspark.sql.protobuf.functions import from_protobuf
@@ -484,7 +485,7 @@ def decode_avro(df: DataFrame, schema_opt, avro_schema_json: str | None = None) 
                    if recs else pd.DataFrame({n: [] for n in names}))
 
     value_df = df.select(F.col("value"))
-    return (value_df.mapInPandas(run, schema)
+    return (map_in_pandas(value_df, run, schema)
             .withColumn(ROW_KIND_COL, F.lit("+I")))
 
 

@@ -23,6 +23,8 @@ from datetime import date, datetime
 
 from pyspark.sql import SparkSession
 
+from seatunnel_spark._pyworker import register_udf
+
 # Zeta name -> Spark name (argument-compatible). Word-boundary,
 # case-insensitive, applied only to call sites ``NAME(``.
 _NAME_REWRITES = {
@@ -857,7 +859,7 @@ def register_zeta_udf(name: str, fn, return_type) -> None:
 
     active = SparkSession.getActiveSession()
     if active is not None:
-        active.udf.register(name.upper(), fn, return_type)
+        register_udf(active, name.upper(), fn, return_type)
 
 
 def _example_udf(arg):
@@ -929,23 +931,23 @@ def register_zeta_udfs(spark: SparkSession) -> None:
         return
     from pyspark.sql.types import BooleanType, DoubleType, StringType
 
-    spark.udf.register("ZETA_TO_CHAR", _to_char, StringType())
-    spark.udf.register("INSERT_STR", _insert, StringType())
-    spark.udf.register(
-        "ZETA_DAYNAME", lambda d: d.strftime("%A") if d is not None else None,
-        StringType(),
+    register_udf(spark, "ZETA_TO_CHAR", _to_char, StringType())
+    register_udf(spark, "INSERT_STR", _insert, StringType())
+    register_udf(
+        spark, "ZETA_DAYNAME",
+        lambda d: d.strftime("%A") if d is not None else None, StringType(),
     )
-    spark.udf.register(
-        "ZETA_MONTHNAME", lambda d: d.strftime("%B") if d is not None else None,
-        StringType(),
+    register_udf(
+        spark, "ZETA_MONTHNAME",
+        lambda d: d.strftime("%B") if d is not None else None, StringType(),
     )
-    spark.udf.register("IS_DATE", _is_date, BooleanType())
-    spark.udf.register("TRUNCATE", _truncate, DoubleType())
-    spark.udf.register("EXAMPLE", _example_udf, StringType())
-    spark.udf.register("DES_ENCRYPT", _des_encrypt, StringType())
-    spark.udf.register("DES_DECRYPT", _des_decrypt, StringType())
-    spark.udf.register("ZETA_HEXTORAW", _zeta_hextoraw, StringType())
-    spark.udf.register("ZETA_RAWTOHEX", _zeta_rawtohex, StringType())
+    register_udf(spark, "IS_DATE", _is_date, BooleanType())
+    register_udf(spark, "TRUNCATE", _truncate, DoubleType())
+    register_udf(spark, "EXAMPLE", _example_udf, StringType())
+    register_udf(spark, "DES_ENCRYPT", _des_encrypt, StringType())
+    register_udf(spark, "DES_DECRYPT", _des_decrypt, StringType())
+    register_udf(spark, "ZETA_HEXTORAW", _zeta_hextoraw, StringType())
+    register_udf(spark, "ZETA_RAWTOHEX", _zeta_rawtohex, StringType())
     for name, (fn, rt) in _USER_UDFS.items():
-        spark.udf.register(name, fn, rt)
+        register_udf(spark, name, fn, rt)
     _REGISTERED_SESSIONS.add(key)

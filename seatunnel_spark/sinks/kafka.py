@@ -19,6 +19,7 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.sinks.base import Sink
 
 
@@ -102,7 +103,7 @@ class KafkaSink(Sink):
                                 pdf.to_dict("records")]
                         yield pd.DataFrame({"value": vals})
 
-                return data_df.mapInPandas(enc, "value binary")
+                return map_in_pandas(data_df, enc, "value binary")
         elif fmt == "protobuf":
             proto_src = self.require("protobuf_schema")
             message_name = self.require("protobuf_message_name")
@@ -127,7 +128,7 @@ class KafkaSink(Sink):
                             for rec in pdf.to_dict("records")]
                     yield pd.DataFrame({"value": vals})
 
-            return data_df.mapInPandas(penc, "value binary")
+            return map_in_pandas(data_df, penc, "value binary")
         else:
             raise ValueError(f"Kafka sink format {fmt!r} not supported")
         if key_field:

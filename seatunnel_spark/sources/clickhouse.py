@@ -20,6 +20,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -90,7 +91,7 @@ class ClickhouseSource(Source):
                         if recs else pd.DataFrame(
                         {n: [] for n, _ in names}))
 
-        return one.mapInPandas(run, schema)
+        return map_in_pandas(one, run, schema)
 
 
 _CH_TYPES = {

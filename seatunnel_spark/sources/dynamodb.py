@@ -19,6 +19,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -145,7 +146,7 @@ class DynamoDbSource(Source):
                         if not start_key:
                             break
 
-        return seg_df.mapInPandas(scan, schema)
+        return map_in_pandas(seg_df, scan, schema)
 
 
 class DynamoDbSink(Sink):

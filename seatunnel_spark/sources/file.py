@@ -23,6 +23,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.sources.base import Source
 from seatunnel_spark.types import parse_schema
 
@@ -245,8 +246,9 @@ def _read_archive_lines(spark, path: str, codec: str, encoding: str):
                     lines.extend(blob.decode(encoding).splitlines())
                 yield pd.DataFrame({"value": lines})
 
-    return (spark.read.format("binaryFile").load(path)
-            .select("content").mapInPandas(unpack, "value string"))
+    return map_in_pandas(
+        spark.read.format("binaryFile").load(path).select("content"),
+        unpack, "value string")
 
 
 # schema {} keys that are catalog metadata, not field declarations
@@ -534,9 +536,10 @@ class FileSource(Source):
                                 {"value": bytes(data).decode(encoding)
                                  .splitlines()})
 
-                raw = (spark.read.format("binaryFile").load(self._path())
-                       .select("content")
-                       .mapInPandas(decode_lines, "value string"))
+                raw = map_in_pandas(
+                    spark.read.format("binaryFile").load(self._path())
+                    .select("content"),
+                    decode_lines, "value string")
             else:
                 # gz/bzip2 decompress by extension in the native reader.
                 raw = spark.read.text(self._path())
@@ -644,9 +647,10 @@ class FileSource(Source):
                                 {"value": bytes(data).decode(encoding)
                                  .splitlines()})
 
-                raw = (spark.read.format("binaryFile").load(self._path())
-                       .select("content")
-                       .mapInPandas(decode_lines, "value string"))
+                raw = map_in_pandas(
+                    spark.read.format("binaryFile").load(self._path())
+                    .select("content"),
+                    decode_lines, "value string")
             df = raw.select(F.from_json("value", schema).alias("r")).select("r.*")
         elif fmt == "xml" and fields_opt:
             # Reference XML rows carry values as attributes
@@ -812,7 +816,7 @@ class FileSource(Source):
                                         str(pdf[pc].iloc[i]))
                         yield pd.DataFrame(out, columns=list(out))
 
-            df = raw.mapInPandas(decode, out_schema)
+            df = map_in_pandas(raw, decode, out_schema)
         elif fmt == "binary":
             # Reference binary rows: data/relativePath/partIndex
             # (BinaryReadStrategy.java:40) — whole-file fragments for

@@ -22,6 +22,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -105,7 +106,7 @@ class MilvusSource(Source):
                     return
                 offset += batch
 
-        return one.mapInPandas(run, schema)
+        return map_in_pandas(one, run, schema)
 
 
 class MilvusSink(Sink):
@@ -237,7 +238,7 @@ class Neo4jSource(Source):
                 recs, columns=[n for n, _ in names])
                 if recs else pd.DataFrame({n: [] for n, _ in names}))
 
-        return one.mapInPandas(run, schema)
+        return map_in_pandas(one, run, schema)
 
 
 class Neo4jSink(Sink):

@@ -20,6 +20,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -98,7 +99,7 @@ class InfluxDbSource(Source):
                     yield (pd.DataFrame.from_records(recs, columns=names)
                            if recs else pd.DataFrame({n: [] for n in names}))
 
-        return sdf.mapInPandas(run, schema)
+        return map_in_pandas(sdf, run, schema)
 
 
 def _line_escape(s: str, is_tag: bool) -> str:

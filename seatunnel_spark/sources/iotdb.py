@@ -21,6 +21,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -120,7 +121,7 @@ class IoTDbSource(Source):
                         yield pd.DataFrame.from_records(
                             recs, columns=[nm for nm, _ in names])
 
-        return sdf.mapInPandas(run, schema)
+        return map_in_pandas(sdf, run, schema)
 
 
 class IoTDbSink(Sink):

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark import kudu_rpc as K
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -121,7 +122,7 @@ class KuduSource(Source):
             [(i, bytearray(tid), host, port) for i, tid, host, port in splits],
             "i int, tablet_id binary, host string, port int",
         ).repartition(max(len(splits), 1), "i")
-        df = split_df.mapInPandas(scan_split, schema)
+        df = map_in_pandas(split_df, scan_split, schema)
         flt = self.opt("filter")
         if flt:
             df = df.filter(flt)

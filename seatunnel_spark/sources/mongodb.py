@@ -28,6 +28,7 @@ from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark import bson_codec as bson
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sources.base import Source
@@ -318,7 +319,7 @@ class MongoSource(Source):
             finally:
                 cl.close()
 
-        return rows.mapInPandas(fetch_ranges, schema)
+        return map_in_pandas(rows, fetch_ranges, schema)
 
 
 __all__ = ["MongoClientLite", "MongoSource", "parse_match"]

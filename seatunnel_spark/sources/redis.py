@@ -22,6 +22,7 @@ import socket
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sources.base import Source
 
@@ -191,7 +192,7 @@ class RedisSource(Source):
             finally:
                 cl.close()
 
-        raw = kdf.mapInPandas(fetch, "content string")
+        raw = map_in_pandas(kdf, fetch, "content string")
         schema = self.opt("schema") or {}
         schema_opt = schema.get("fields")
         if not schema_opt and schema.get("columns"):

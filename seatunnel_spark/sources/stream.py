@@ -21,6 +21,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.sources.base import Source
 from seatunnel_spark.formats import decode_payload
 
@@ -194,8 +195,8 @@ class KafkaSource(Source):
             finally:
                 cl.close()
 
-        return pdf.mapInPandas(
-            fetch_parts,
+        return map_in_pandas(
+            pdf, fetch_parts,
             "value binary, key string, partition int, offset long")
 
     def _wire_read_stream(self, spark: SparkSession) -> DataFrame:

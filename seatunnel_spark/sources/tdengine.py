@@ -21,6 +21,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -107,7 +108,7 @@ class TDengineSource(Source):
                         if recs else pd.DataFrame(
                         {n: [] for n, _ in names}))
 
-        return sdf.mapInPandas(run, schema)
+        return map_in_pandas(sdf, run, schema)
 
 
 def _sql_lit(v) -> str:

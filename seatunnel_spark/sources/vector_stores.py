@@ -20,6 +20,7 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.net import apply_host_aliases
 from seatunnel_spark.sinks.base import Sink
 from seatunnel_spark.sources.base import Source
@@ -140,7 +141,7 @@ class QdrantSource(Source):
                 if offset is None:
                     break
 
-        return one.mapInPandas(run, schema)
+        return map_in_pandas(one, run, schema)
 
 
 class QdrantSink(Sink):
@@ -257,7 +258,7 @@ class TypesenseSource(Source):
             yield (pd.DataFrame.from_records(recs, columns=names)
                    if recs else pd.DataFrame({n: [] for n in names}))
 
-        return one.mapInPandas(run, schema)
+        return map_in_pandas(one, run, schema)
 
 
 class TypesenseSink(Sink):

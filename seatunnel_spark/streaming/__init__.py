@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from seatunnel_spark._pyworker import apply_in_pandas_with_state
 from seatunnel_spark.types import ROW_KIND_COL
 
 
@@ -338,9 +339,9 @@ def stateful_running_counts(
         if timeout_ms is not None
         else GroupStateTimeout.NoTimeout
     )
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
-    )
+    return apply_in_pandas_with_state(
+        df.groupBy(*key_cols), update, out_schema, state_schema, "update",
+        timeout)
 
 
 def stream_hll_dau(df: DataFrame, ts_col: str = "ts",

@@ -32,6 +32,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.transforms.base import Transform
 
 # BasicType/LocalTimeType constant -> schema-DSL type string
@@ -161,7 +162,8 @@ class DynamicCompileTransform(Transform):
             fn = namespace["transform"]
             probe = fn(df.limit(100).toPandas())
             schema = df.sparkSession.createDataFrame(probe).schema
-            return df.mapInPandas(lambda it: (fn(pdf) for pdf in it), schema=schema)
+            return map_in_pandas(df, lambda it: (fn(pdf) for pdf in it),
+                                 schema=schema)
         if "transform_row" in namespace:
             fn = namespace["transform_row"]
 
@@ -177,7 +179,7 @@ class DynamicCompileTransform(Transform):
                 [fn(r) for r in df.limit(100).toPandas().to_dict("records")]
             )
             schema = df.sparkSession.createDataFrame(probe).schema
-            return df.mapInPandas(_map_rows, schema=schema)
+            return map_in_pandas(df, _map_rows, schema=schema)
         raise ValueError(
             "DynamicCompile: source must define transform(pdf) or transform_row(row)"
         )

@@ -25,6 +25,7 @@ import json
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from seatunnel_spark._pyworker import map_in_pandas
 from seatunnel_spark.transforms.base import Transform
 from seatunnel_spark.types import parse_type
 
@@ -323,7 +324,7 @@ class LLMTransform(Transform):
                 pdf[out_col] = [convert(a) for a in answers]
                 yield pdf
 
-        return df.mapInPandas(run_batches, schema=out_schema)
+        return map_in_pandas(df, run_batches, schema=out_schema)
 
 
 class EmbeddingTransform(Transform):
@@ -384,4 +385,4 @@ class EmbeddingTransform(Transform):
                     pdf[out] = vecs
                 yield pdf
 
-        return df.mapInPandas(embed_batches, schema=out_schema)
+        return map_in_pandas(df, embed_batches, schema=out_schema)

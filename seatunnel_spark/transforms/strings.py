@@ -10,6 +10,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from seatunnel_spark._pyworker import python_udf
 from seatunnel_spark.transforms.base import Transform
 from seatunnel_spark.types import parse_type
 
@@ -241,7 +242,7 @@ class JsonPathTransform(Transform):
             # Strict JVM-side extraction first; the Python lenient
             # reader (json-smart-permissive analog) only evaluates on
             # rows where strict parsing yielded nothing.
-            lenient = F.udf(_lenient_json_path, "string")
+            lenient = python_udf(_lenient_json_path, "string")
             extracted = F.coalesce(
                 F.get_json_object(src_col, path),
                 lenient(src_col, F.lit(path)),

@@ -3,11 +3,38 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from seatunnel_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The reference SeaTunnel tree (read-only), checked out beside this
+# repository. Tests that run its confs or read its resources skip,
+# naming the missing path, where it is absent.
+REFERENCE_ROOT = os.path.join(os.path.dirname(REPO), "reference")
+_NO_REFERENCE = f"reference tree {REFERENCE_ROOT} is absent"
+
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_ROOT), reason=_NO_REFERENCE)
+
+
+def reference_path(*parts: str) -> str:
+    """A path inside the reference tree."""
+    return os.path.join(REFERENCE_ROOT, *parts)
+
+
+def reference_params(values: list, path=lambda v: v) -> list:
+    """Parametrize values over reference files: those whose
+    `path(value)` exists. Where the tree is absent, one param marked
+    skip that names it, so collection cannot fail on an empty set."""
+    if not os.path.isdir(REFERENCE_ROOT):
+        width = len(values[0]) if values and isinstance(values[0],
+                                                        tuple) else 1
+        return [pytest.param(*([None] * width), id="no-reference",
+                             marks=pytest.mark.skip(reason=_NO_REFERENCE))]
+    return [v for v in values if os.path.exists(path(v))]
 
 
 @pytest.fixture(scope="session")

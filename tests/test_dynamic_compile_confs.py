@@ -21,11 +21,12 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
+from conftest import reference_params, reference_path
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_RES = ("/root/reference/seatunnel-e2e/seatunnel-transforms-v2-e2e/"
-        "seatunnel-transforms-v2-e2e-part-2/src/test/resources/dynamic_compile")
+_RES = reference_path("seatunnel-e2e/seatunnel-transforms-v2-e2e/"
+                      "seatunnel-transforms-v2-e2e-part-2/src/test/resources/dynamic_compile")
 
 DYNAMIC_CONFS = [
     f"{_RES}/conf/single_dynamic_java_compile_transform.conf",
@@ -84,7 +85,7 @@ def compile_fixtures():
 
 
 @pytest.mark.parametrize(
-    "conf", [c for c in DYNAMIC_CONFS if os.path.exists(c)],
+    "conf", reference_params(DYNAMIC_CONFS),
     ids=lambda c: os.path.basename(c),
 )
 def test_dynamic_compile_conf(spark, compile_fixtures, conf):

@@ -17,13 +17,14 @@ import os
 
 import pytest
 
+from conftest import reference_params, reference_path
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_BASE = ("/root/reference/seatunnel-e2e/seatunnel-engine-e2e/"
-         "connector-seatunnel-e2e-base/src/test/resources")
-_CONSOLE = ("/root/reference/seatunnel-e2e/seatunnel-engine-e2e/"
-            "connector-console-seatunnel-e2e/src/test/resources")
+_BASE = reference_path("seatunnel-e2e/seatunnel-engine-e2e/"
+                       "connector-seatunnel-e2e-base/src/test/resources")
+_CONSOLE = reference_path("seatunnel-e2e/seatunnel-engine-e2e/"
+                          "connector-console-seatunnel-e2e/src/test/resources")
 
 # UserVariableIT.userVariableTest / userVariableWithDefaultValueTest
 _VARS_FULL = {
@@ -108,7 +109,7 @@ def tmp_sink_root(tmp_path_factory):
 
 @pytest.mark.parametrize(
     "conf,variables",
-    [c for c in ENGINE_CONFS if os.path.exists(c[0])],
+    reference_params(ENGINE_CONFS, path=lambda c: c[0]),
     ids=lambda v: (os.path.basename(v) if isinstance(v, str)
                    else "-".join(str(x) for x in (v or {}).values())[:40]),
 )
@@ -118,7 +119,7 @@ def test_engine_conf_runs_unmodified(spark, tmp_sink_root, conf, variables):
 
 
 @pytest.mark.parametrize(
-    "conf", [c for c in STREAMING_CONFS if os.path.exists(c)],
+    "conf", reference_params(STREAMING_CONFS),
     ids=lambda c: os.path.basename(c),
 )
 def test_streaming_engine_conf_bounded(spark, tmp_sink_root, conf):

@@ -18,11 +18,12 @@ from urllib.parse import parse_qs, urlsplit
 
 import pytest
 
+from conftest import reference_params, reference_path
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_RES = ("/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e/"
-        "connector-http-e2e/src/test/resources")
+_RES = reference_path("seatunnel-e2e/seatunnel-connector-v2-e2e/"
+                      "connector-http-e2e/src/test/resources")
 
 HTTP_CONFS = [
     f"{_RES}/http_json_to_assert.conf",
@@ -124,7 +125,7 @@ def mock_http_server():
 
 
 @pytest.mark.parametrize(
-    "conf", [c for c in HTTP_CONFS if os.path.exists(c)],
+    "conf", reference_params(HTTP_CONFS),
     ids=lambda c: os.path.basename(c),
 )
 def test_http_conf_against_reference_mock(spark, mock_http_server, conf):

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from conftest import reference_path, requires_reference
 from seatunnel_spark import krb5 as K
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
@@ -18,10 +19,10 @@ from seatunnel_spark.testing.kdc_server import (
     write_krb5_conf,
 )
 
-_KAFKA_RES = ("/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e/"
-              "connector-kafka-e2e/src/test/resources/kerberos")
-_HIVE_RES = ("/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e/"
-             "connector-hive-e2e/src/test/resources")
+_KAFKA_RES = reference_path("seatunnel-e2e/seatunnel-connector-v2-e2e/"
+                            "connector-kafka-e2e/src/test/resources/kerberos")
+_HIVE_RES = reference_path("seatunnel-e2e/seatunnel-connector-v2-e2e/"
+                           "connector-hive-e2e/src/test/resources")
 
 
 # ---------------------------------------------------------------------
@@ -192,6 +193,7 @@ def test_kafka_source_kerberos_conf(spark, kerberized_kafka):
     assert any("authenticated" in e for e in broker.sasl_events)
 
 
+@requires_reference
 def test_kafka_kerberos_wrong_keytab_fails(spark, kerberized_kafka,
                                            tmp_path, monkeypatch):
     """KafkaKerberosIT.testKerberosWithoutPermission analog: a keytab
@@ -263,6 +265,7 @@ def test_hive_kerberos_confs(spark, hive_krb):
     assert len(rows) == 3
 
 
+@requires_reference
 def test_hive_kerberos_bad_keytab_fails(spark, hive_krb, tmp_path,
                                         monkeypatch):
     srv, _ = hive_krb

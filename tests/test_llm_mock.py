@@ -12,11 +12,12 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
+from conftest import reference_params, reference_path
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_P1 = ("/root/reference/seatunnel-e2e/seatunnel-transforms-v2-e2e/"
-       "seatunnel-transforms-v2-e2e-part-1/src/test/resources")
+_P1 = reference_path("seatunnel-e2e/seatunnel-transforms-v2-e2e/"
+                     "seatunnel-transforms-v2-e2e-part-1/src/test/resources")
 
 LLM_CONFS = [
     f"{_P1}/llm_openai_transform.conf",
@@ -90,7 +91,7 @@ def mock_llm_server():
 
 
 @pytest.mark.parametrize(
-    "conf", [c for c in LLM_CONFS if os.path.exists(c)],
+    "conf", reference_params(LLM_CONFS),
     ids=lambda c: os.path.basename(c),
 )
 def test_llm_conf_against_reference_mock(spark, mock_llm_server, conf):

@@ -8,13 +8,14 @@ import os
 
 import pytest
 
+from conftest import reference_params, reference_path
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_E2E = "/root/reference/seatunnel-e2e/seatunnel-transforms-v2-e2e"
+_E2E = reference_path("seatunnel-e2e/seatunnel-transforms-v2-e2e")
 _P1 = f"{_E2E}/seatunnel-transforms-v2-e2e-part-1/src/test/resources"
 _P2 = f"{_E2E}/seatunnel-transforms-v2-e2e-part-2/src/test/resources"
-_CONN = "/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e"
+_CONN = reference_path("seatunnel-e2e/seatunnel-connector-v2-e2e")
 _ASSERT = f"{_CONN}/connector-assert-e2e/src/test/resources/assertion"
 _FAKE = f"{_CONN}/connector-fake-e2e/src/test/resources"
 
@@ -98,7 +99,7 @@ REFERENCE_CONFS = [
 
 
 @pytest.mark.parametrize(
-    "conf", [c for c in REFERENCE_CONFS if os.path.exists(c)],
+    "conf", reference_params(REFERENCE_CONFS),
     ids=lambda c: os.path.basename(c),
 )
 def test_reference_conf_runs_unmodified(spark, conf):
