@@ -11,8 +11,9 @@ re-reads the archive's whole directory, and a worker that imported
 `pyspark.sql` from `pyspark.zip` holds 14–16 zipimporters on that
 1328-entry archive: 100–160 ms of CPU per task on a 4-core host,
 before any user code runs. `python_stage` wraps each stage's function
-so that its first call in a worker process replaces
-`zipimporter.invalidate_caches` with one that keeps an archive's
+in an object that a worker unpickles as the function itself, after
+replacing (once per process) `zipimporter.invalidate_caches` with one
+that keeps an archive's
 directory while the archive's (st_mtime_ns, st_size, st_ino) is
 unchanged. It calls the stock method when that key changed, when
 `os.stat` fails, and the first time it meets an archive, so an archive
@@ -23,18 +24,19 @@ the patch, and one read per archive in its second, to learn the key.
 
 Shipped by value. The stage functions run in Python workers and call
 their module's kernels. This module and every operator module that
-calls `ship_by_value(__name__)` are pickled by value, so the wrapper
+calls `ship_by_value(__name__)` are pickled by value, so the patch
 and the kernels run on a worker that cannot import seatunnel_spark;
 the package need only be importable on the driver. No
 `sitecustomize`, executor environment or PYTHONPATH entry is needed.
 
-Same signature. PySpark reads the arity of grouped and cogrouped
-functions with `inspect.getfullargspec` (pyspark/worker.py), which
-does not follow `__wrapped__`: `(pdf)` and `(key, pdf)`, `(l, r)` and
-`(key, l, r)` dispatch on it. The wrapper is therefore generated with
-the wrapped function's own parameter list, and `functools.wraps`
-carries the annotations, so pandas_udf type-hint inference sees the
-function it always saw.
+Same signature. On the driver PySpark reads the wrapper: the arity of
+grouped and cogrouped functions with `inspect.getfullargspec`, which
+does not follow `__wrapped__` but does read `__signature__`, and
+pandas_udf type hints with `inspect.signature`/`get_type_hints`. The
+wrapper carries the function's own signature, name and annotations, so
+`(pdf)` and `(key, pdf)`, `(l, r)` and `(key, l, r)` and type-hint
+inference resolve as they always did. A worker holds the bare
+function, so its arity dispatch and its rows pay nothing per call.
 """
 
 from __future__ import annotations
@@ -90,58 +92,34 @@ def _ensure_zip_patch() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def _param_lists(fn) -> tuple[str, str, tuple, dict]:
-    """(parameter list, call arguments, __defaults__, __kwdefaults__)
-    reproducing `fn`'s signature as getfullargspec reads it."""
-    try:
-        sig = inspect.signature(fn, follow_wrapped=False)
-    except (TypeError, ValueError):  # a builtin without a signature
-        return "*args, **kwargs", "*args, **kwargs", (), {}
-    params: list[str] = []
-    call: list[str] = []
-    defaults: list = []
-    kwdefaults: dict = {}
-    plist = list(sig.parameters.values())
-    kinds = [p.kind for p in plist]
-    n_posonly = kinds.count(inspect.Parameter.POSITIONAL_ONLY)
-    for i, p in enumerate(plist):
-        if p.kind is p.VAR_POSITIONAL:
-            params.append("*" + p.name)
-            call.append("*" + p.name)
-        elif p.kind is p.VAR_KEYWORD:
-            params.append("**" + p.name)
-            call.append("**" + p.name)
-        elif p.kind is p.KEYWORD_ONLY:
-            if p.VAR_POSITIONAL not in kinds and "*" not in params:
-                params.append("*")
-            params.append(p.name)
-            call.append(f"{p.name}={p.name}")
-            if p.default is not p.empty:
-                kwdefaults[p.name] = p.default
-        else:
-            params.append(p.name)
-            call.append(p.name)
-            if p.default is not p.empty:
-                defaults.append(p.default)
-            if i + 1 == n_posonly:  # positional-only ones come first
-                params.append("/")
-    return ", ".join(params), ", ".join(call), tuple(defaults), kwdefaults
+class _Stage:
+    """`fn` as the driver hands it to PySpark: same name, signature and
+    annotations. A worker unpickles it as `fn` itself, installing the
+    stat-keyed zip patch on the way, so no call pays for the helper."""
+
+    def __init__(self, fn):
+        functools.update_wrapper(self, fn)
+        try:
+            self.__signature__ = inspect.signature(fn, follow_wrapped=False)
+        except ValueError:  # a builtin without one; only row UDFs take those
+            pass
+
+    def __call__(self, *args, **kwargs):
+        return self.__wrapped__(*args, **kwargs)
+
+    def __reduce__(self):
+        return _unpickle_stage, (self.__wrapped__,)
+
+
+def _unpickle_stage(fn):
+    _ensure_zip_patch()
+    return fn
 
 
 def python_stage(fn):
-    """`fn` wrapped so its first call in a worker process installs the
-    stat-keyed zip patch; same parameters, defaults and annotations."""
-    params, call, defaults, kwdefaults = _param_lists(fn)
-    ns: dict = {}
-    exec(f"def factory(_stage_fn_, _stage_setup_):\n"  # noqa: S102
-         f"    def stage({params}):\n"
-         f"        _stage_setup_()\n"
-         f"        return _stage_fn_({call})\n"
-         f"    return stage\n", ns)
-    stage = ns["factory"](fn, _ensure_zip_patch)
-    stage.__defaults__ = defaults or None
-    stage.__kwdefaults__ = kwdefaults or None
-    return functools.update_wrapper(stage, fn)
+    """`fn` for a Python stage: unpickling it in a worker task installs
+    the stat-keyed zip patch."""
+    return _Stage(fn)
 
 
 # --------------------------------------------------------------------------
@@ -149,9 +127,9 @@ def python_stage(fn):
 # with its function passed through python_stage.
 # --------------------------------------------------------------------------
 
-def map_in_pandas(df, fn, schema, **kwargs):
-    """df.mapInPandas(fn, schema, ...)."""
-    return df.mapInPandas(python_stage(fn), schema, **kwargs)
+def map_in_pandas(df, fn, schema):
+    """df.mapInPandas(fn, schema)."""
+    return df.mapInPandas(python_stage(fn), schema)
 
 
 def apply_in_pandas(grouped, fn, schema):
@@ -168,12 +146,12 @@ def apply_in_pandas_with_state(grouped, fn, output_struct, state_struct,
                                           timeout_conf)
 
 
-def vectorized_udf(return_type, function_type=None):
-    """Decorator: F.pandas_udf(fn, return_type[, function_type])."""
+def vectorized_udf(return_type):
+    """Decorator: F.pandas_udf(fn, return_type)."""
     from pyspark.sql import functions as F
 
     def build(fn):
-        return F.pandas_udf(python_stage(fn), return_type, function_type)
+        return F.pandas_udf(python_stage(fn), return_type)
 
     return build
 

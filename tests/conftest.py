@@ -3,17 +3,16 @@ import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from seatunnel_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The reference SeaTunnel tree (read-only), checked out beside this
-# repository. Tests that run its confs or read its resources skip,
-# naming the missing path, where it is absent.
-REFERENCE_ROOT = os.path.join(os.path.dirname(REPO), "reference")
+# The reference SeaTunnel tree (read-only), at the fixed path the other
+# test modules use. Tests that run its confs or read its resources
+# skip, naming the missing path, where it is absent.
+REFERENCE_ROOT = "/root/reference"
 _NO_REFERENCE = f"reference tree {REFERENCE_ROOT} is absent"
 
 requires_reference = pytest.mark.skipif(

@@ -104,9 +104,10 @@ def test_python_worker_queries_run_without_package_on_worker_path(
 
 
 _ZIP_SEMANTICS = """
-import importlib, json, os, sys, zipfile, zipimport
+import importlib, json, os, pickle, sys, zipfile, zipimport
 from importlib.machinery import FileFinder
 sys.path.insert(0, {root!r})
+from pyspark import cloudpickle
 
 stock_filefinder = FileFinder.invalidate_caches
 from seatunnel_spark import _pyworker
@@ -133,8 +134,11 @@ def counting_read(path):
 
 
 zipimport._read_directory = counting_read
-_pyworker.python_stage(lambda: None)()  # a wrapped call installs the patch
-out = {{}}
+out = {{"patched_before": getattr(zipimport.zipimporter.invalidate_caches,
+                                 "_seatunnel_stat_keyed", False)}}
+# a worker unpickling a stage installs the patch and gets the bare function
+out["unpickled_bare"] = pickle.loads(
+    cloudpickle.dumps(_pyworker.python_stage(len))) is len
 importlib.invalidate_caches()  # first sight of each archive: stock read
 out["first"] = reads.count(archive)
 del reads[:]
@@ -171,6 +175,7 @@ def test_rewritten_archive_is_read_again(zip_semantics):
 
 
 def test_unchanged_archive_is_not_read_again(zip_semantics):
+    assert not zip_semantics["patched_before"]
     assert zip_semantics["patched"]
     assert zip_semantics["first"] == 1
     assert zip_semantics["unchanged"] == 0
@@ -178,6 +183,10 @@ def test_unchanged_archive_is_not_read_again(zip_semantics):
 
 def test_filefinder_keeps_its_stock_method(zip_semantics):
     assert zip_semantics["filefinder_stock"]
+
+
+def test_worker_unpickles_the_bare_function(zip_semantics):
+    assert zip_semantics["unpickled_bare"]
 
 
 _STAGES = """
@@ -276,6 +285,10 @@ for name, fn in (("pandas_udf", plus), ("pandas_udf_iter", plus_iter)):
     wrapped = rows(df.select(pw.vectorized_udf("long")(fn)("i")))
     out[name] = [raw == wrapped, len(raw)]
 out["iter_eval_type"] = pw.vectorized_udf("long")(plus_iter).evalType
+raw = rows(df.select(F.udf(lambda i: i * 3, "long")("i")))
+out["python_udf"] = [
+    raw == rows(df.select(pw.python_udf(lambda i: i * 3, "long")("i"))),
+    len(raw)]
 out["wrapped_reads"] = per_worker(
     pw.map_in_pandas(many, reads_so_far, "pid long, reads long").collect())
 spark.stop()
@@ -291,7 +304,7 @@ def stages(tmp_path_factory):
 
 @pytest.mark.parametrize("shape", ["grouped_1", "grouped_2", "cogroup_2",
                                    "cogroup_3", "pandas_udf",
-                                   "pandas_udf_iter"])
+                                   "pandas_udf_iter", "python_udf"])
 def test_wrapped_stage_returns_the_raw_stages_rows(stages, shape):
     same, n = stages[shape]
     assert same and n > 0
