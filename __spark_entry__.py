@@ -935,8 +935,10 @@ def decontam_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters = connected components over the n-gram
     Jaccard near-dup graph (seatunnel_spark/dataops/dedup.py:
-    duplicate_clusters — min-label propagation, one shuffle join per
-    round). cluster_id = min doc_id of the component."""
+    duplicate_clusters, which runs graph.connected_components —
+    min-label propagation until no label changes; each round is one
+    neighbor-min join plus one checkpoint job that counts the changed
+    labels). cluster_id = min doc_id of the component."""
     from seatunnel_spark.dataops import duplicate_clusters, ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(
@@ -988,12 +990,12 @@ def _classifier_features(spark: SparkSession, sf_dir: str,
     /100 and /10 scalings (token count and mean token length at
     their natural magnitudes) — the input shape the standardize=True
     fit is built for."""
-    from seatunnel_spark.dataops.dedup import _ensure_parallelism
+    from seatunnel_spark.dataops._cache import ensure_parallelism
     from seatunnel_spark.dataops.text import quality_score
 
     # spread the single-split local scan before the per-row text
     # statistics (identical results; no-op on a many-split corpus)
-    d = _ensure_parallelism(_t(spark, sf_dir, "documents"))
+    d = ensure_parallelism(_t(spark, sf_dir, "documents"))
     q = quality_score(d).select(
         "doc_id",
         F.when(F.col("quality_score") >= 0.85, 1.0)
@@ -3522,14 +3524,15 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (dataops/graph.py:connected_components —
-    hash-to-min + pointer jumping, Rastogi et al. 2013) of the STRONG
-    co-purchase graph (parts co-ordered in >= 3 distinct orders):
-    component = the minimum reachable part key, a canonical labeling
-    unique at any iteration schedule, which the oracle replays as
-    recursive min-reachability. Convergence-checked (one bounded count
-    per round), O(log diameter) rounds via the shortcut step, per-round
-    |V|-row localCheckpoint (without it the pointer-jump self-join
-    doubles the logical plan every round — measured non-termination)."""
+    min-label propagation) of the STRONG co-purchase graph (parts
+    co-ordered in >= 3 distinct orders): component = the minimum
+    reachable part key, a canonical labeling unique at any iteration
+    schedule, which the oracle replays as recursive min-reachability.
+    Runs until a round changes no label (at most diameter + 1 rounds;
+    2-3 on this graph). Each round is one neighbor-min join plus one
+    |V|-row localCheckpoint job whose observed metric counts the
+    changed labels — no separate probe job, and the checkpoint keeps
+    the self-referencing label plan from doubling every round."""
     from seatunnel_spark.dataops.analytics import copurchase_pairs
     from seatunnel_spark.dataops.graph import connected_components
 

@@ -74,8 +74,8 @@ def cache_scope():
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Scale-adaptive scan parallelism, the ONE shared implementation
-    (ADVICE r11: dedup._ensure_parallelism and similarity._spread were
-    verbatim copies that could drift): round-robin repartition to
+    (dedup and __spark_entry__ call it directly; similarity._spread
+    delegates here, so no copy can drift): round-robin repartition to
     defaultParallelism ONLY when the planned input has fewer than half
     that many partitions. A no-op at scale — a properly-split corpus
     scan already has plenty of partitions and never pays the shuffle.

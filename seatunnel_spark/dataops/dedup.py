@@ -43,8 +43,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from seatunnel_spark._pyworker import ship_by_value, vectorized_udf
+from seatunnel_spark.dataops._cache import ensure_parallelism
 from seatunnel_spark.dataops._cache import qcol as _qcol
 from seatunnel_spark.dataops._cache import scoped_persist
+from seatunnel_spark.dataops.graph import connected_components
 
 ship_by_value(__name__)
 
@@ -74,15 +76,6 @@ def _cap_buckets(df: DataFrame, keys: list[str],
         .filter(F.col("__bn") <= F.lit(max_bucket))
         .drop("__bn")
     )
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread CPU-heavy per-row work across cores when the scan produced
-    too few partitions (small files read as 1 split); delegates to the
-    one shared implementation (see _cache.ensure_parallelism)."""
-    from seatunnel_spark.dataops._cache import ensure_parallelism
-
-    return ensure_parallelism(df)
 
 
 # --------------------------------------------------------------------------
@@ -173,7 +166,7 @@ def minhash_signatures(
     # interpreted higher-order transform). array_distinct is dropped
     # on purpose: duplicate shingles cannot change a min() signature,
     # and skipping the per-doc distinct array saves a full pass.
-    sh = _ensure_parallelism(df).select(
+    sh = ensure_parallelism(df).select(
         F.col(id_col),
         F.explode(_shingle_structs(F.col(text_col), shingle_k)).alias("g"),
     ).select(F.col(id_col), _shingle_str(F.col("g"), shingle_k).alias("sh"))
@@ -354,7 +347,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
         return pd.Series(out, dtype="object")
 
-    return _ensure_parallelism(df).select(
+    return ensure_parallelism(df).select(
         F.col(id_col), _simhash(F.col(text_col)).alias("simhash")
     )
 
@@ -488,7 +481,7 @@ def ngram_jaccard_pairs(
     underestimate for pairs that shared it — the standard stop-shingle
     trade. max_df=None keeps the operator exact.
     """
-    shingled = _ensure_parallelism(df).select(
+    shingled = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         F.array_distinct(_word_shingles(F.col(text_col), k)).alias("sh"),
@@ -571,7 +564,7 @@ def ngram_containment_pairs(
     (a short boilerplate-heavy doc could false-positive at 1.0).
     With pre-cap sizes the score is a clean underestimate, the same
     direction as the Jaccard trade."""
-    shingled = _ensure_parallelism(df).select(
+    shingled = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         F.array_distinct(_word_shingles(F.col(text_col), k)).alias("sh"),
@@ -600,82 +593,24 @@ def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the
     canonical "keep one document per duplicate cluster" step that
     follows any pairwise dedup (MinHash/SimHash/embedding pairs).
 
-    Min-label propagation: every vertex starts labeled with itself;
-    each round takes the min label over its neighbors; converges in
-    O(component diameter) rounds. Duplicate clusters are shallow
-    (near-cliques), so 2-3 rounds is typical. Each round is ONE
-    shuffle join + ONE map-side-combined min aggregation — no driver
-    graph, no collected edges, so it scales to billions of pairs.
-    The STATIC edge list persists as a compressed columnar cache
-    (resilient: an evicted block recomputes — the graph.py lesson);
-    the per-round LABELS localCheckpoint, because there the point is
-    truncating the iterative lineage that would otherwise make
-    Catalyst re-analyze an ever-deeper plan at 100 TB, and the
-    (id, label) frame is the smallest thing in the job.
+    Runs graph.connected_components over the pairs (min-label
+    propagation until no label changes; see its docstring for the
+    round shape and the lineage discipline). Duplicate clusters are
+    shallow (near-cliques), so 2-3 rounds is typical. No driver
+    graph, no collected edges, so it scales to billions of pairs. The
+    pairs are not deduplicated first: a repeated pair only repeats a
+    min candidate.
 
     Returns (id, cluster_id) for every vertex that appears in `pairs`;
     cluster_id is the component's minimum id (deterministic canon).
-
-    Round shape (round 12, the graph.py loop discipline): the
-    convergence probe rides the round's own checkpoint as an observed
-    metric instead of a separate count() job (measured 111 vs 178
-    ms/round even on a 50-row frame — the observe callback costs less
-    than the count job it replaces at every size). Deliberately NOT
-    broadcast-hinted like graph.py's loops: there the edge side is
-    orders of magnitude bigger than the |V|-row state (|E| ≫ |V|),
-    so pinning the state as build side saves a per-round edge-side
-    hash-relation rebuild; here |edges| = 2·|pairs| and |labels| =
-    |touched vertices| are the SAME order, the planner's own choice
-    is already fine at both scales, and a paired A/B of hinted rounds
-    measured +0.8 s on dedup_keep_best (two forced broadcast builds
-    per round on tiny cluster graphs).
     """
-    from seatunnel_spark.dataops.graph import _checkpoint_observed
-
-    edges = scoped_persist(pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).union(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ))
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src").agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(
-                labels.id,
-                F.least(
-                    labels.label, F.coalesce("nbr_label", labels.label)
-                ).alias("label"),
-                (F.coalesce("nbr_label", labels.label) < labels.label)
-                .alias("__chg"),
-            )
-        )
-        new_labels, changed = _checkpoint_observed(
-            new_labels, F.sum(F.col("__chg").cast("long")))
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    # labels is localCheckpoint-materialized (every round), so the
-    # result no longer reads the edge cache — release it here instead
-    # of leaving it registered in the CacheManager until session end
-    # (persist()ed plans, unlike checkpoint RDDs, are NOT collected by
-    # the ContextCleaner; long-lived sessions would accumulate them)
-    edges.unpersist()
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    return connected_components(pairs, id_a, id_b, dedupe=False).select(
+        F.col("node").alias("id"), F.col("component").alias("cluster_id"))
 
 
 def jaccard_dup_clusters(
@@ -860,9 +795,9 @@ def embedding_near_dups(
         bucket = _bucket_expr(_qcol(vec_col), plane_mat)
     else:
         bucket = None
-    # _ensure_parallelism: the bucket/norm projection is the CPU-heavy
+    # ensure_parallelism: the bucket/norm projection is the CPU-heavy
     # per-row pass — spread it off a single-split local scan
-    bucketed = _ensure_parallelism(df).select(
+    bucketed = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), v.alias("v"), norm.alias("n"),
         *( [bucket.alias("bucket")] if bucket is not None else [] ),
     )
@@ -886,7 +821,7 @@ def embedding_near_dups(
         # Exact all-pairs validation mode: broadcast nested-loop keeps
         # the left side's parallelism (a constant equi-key would funnel
         # every row through one shuffle partition).
-        a = _ensure_parallelism(bucketed).alias("a")
+        a = ensure_parallelism(bucketed).alias("a")
         joined = a.join(F.broadcast(b), F.col("a.id") < F.col("b.id"))
     return (
         joined.select(
@@ -942,9 +877,9 @@ def semantic_dedup(
     if centroids is None:
         centroids = train_ivf_centroids(df, vec_col, nlist=nlist, iters=iters)
     v = F.col(vec_col).cast(T.ArrayType(T.DoubleType()))
-    # _ensure_parallelism: cell assignment + norm are the CPU-heavy
+    # ensure_parallelism: cell assignment + norm are the CPU-heavy
     # per-row pass — spread them off a single-split local scan
-    assigned = scoped_persist(_ensure_parallelism(df).select(
+    assigned = scoped_persist(ensure_parallelism(df).select(
         F.col(id_col).alias("id"), v.alias("v"), _norm(v).alias("n"),
         _nearest_centroid(f"cast({_qcol(vec_col)} as array<double>)",
                           centroids).alias("cell"),
@@ -1152,7 +1087,7 @@ def _shingle_occurrences(df: DataFrame, id_col: str, text_col: str,
                             " ", F.slice("__ws", i, nn))).alias("k")))
     ).otherwise(F.expr(
         "cast(array() as array<struct<p:int,k:string>>)"))
-    return (_ensure_parallelism(df)
+    return (ensure_parallelism(df)
             .select(F.col(id_col).alias("__id"), ws.alias("__ws"))
             .select("__id", F.explode(sh_arr).alias("__s"))
             .select("__id", F.col("__s.p").alias("__pos"),
@@ -1378,7 +1313,7 @@ def _jaccard_prefix_stages(
     # pass runs 4x per execution (the dedup_substring lesson).
     # Columnar persist, same corpus-sized-cache discipline as
     # ngram_jaccard_pairs' inverted index.
-    shingled = scoped_persist(_ensure_parallelism(df).select(
+    shingled = scoped_persist(ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in (block_cols or [])],
         F.array_distinct(_word_shingles(F.col(text_col), k)).alias("sh"),

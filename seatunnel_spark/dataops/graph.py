@@ -295,28 +295,10 @@ def triangles_on_bucketed(spark, table: str,
     return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-def _pointer_jump(prop: DataFrame, nv: int) -> tuple[DataFrame, int]:
-    """One connected-components shortcut step over the round's
-    propagated (node, component, __old) table: component <-
-    component(component), checkpointed, with the number of labels
-    that changed this round observed by the same job."""
-    ptr = prop.select(F.col("node").alias("__t"),
-                      F.col("component").alias("__jc"))
-    jc = F.coalesce(ptr["__jc"], prop["component"])
-    new = (prop.join(_bcast_if_small(ptr, nv),
-                     prop["component"] == ptr["__t"], "left")
-           .select(prop["node"], jc.alias("component"),
-                   (jc != prop["__old"]).alias("__chg")))
-    new, changed = _checkpoint_observed(
-        new, F.sum(F.col("__chg").cast("long")))
-    return new.drop("__chg"), changed
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     dedupe: bool = True,
 ) -> DataFrame:
     """Connected components of an undirected graph -> (node, component)
@@ -325,49 +307,58 @@ def connected_components(
     schedule, which is what makes the converged result oracle-checkable
     (DuckDB replays it as recursive min-reachability).
 
-    Algorithm (hash-to-min with pointer jumping — Rastogi et al. 2013):
-    each round (1) propagates the min label across edges
-    (label'(v) = min(label(v), min over neighbors u of label(u))), then
-    (2) shortcuts label'(v) <- label'(label'(v)). Propagation alone
-    needs O(diameter) rounds — a chain-shaped 100 TB web graph would
-    run hundreds of shuffles; the shortcut step doubles the hop length
-    covered per round, giving O(log d) convergence (tested on a long
-    path graph). Each round is two |V|-row-key shuffles plus one
-    neighbor-min aggregation; the EDGE list is shuffled once up front
-    (the distinct) and then only ever probed on its persisted
-    partitioning. Convergence is a changed-label flag computed INSIDE
-    the round's projection (the pre-round label rides along as a
-    column), summed as a metric observed by the round's checkpoint
-    job (_checkpoint_observed) — no extra new-vs-old join and no probe
-    job per round; `max_iter` is a backstop, not a tuning knob.
+    Algorithm: min-label propagation (`_cc_rounds`). Every node starts
+    labeled with itself; each round sets
+    label'(v) = min(label(v), min over neighbors u of label(u)). The
+    loop runs until a round changes no label. A round that does not
+    stop lowers at least one label, so the loop ends within
+    diameter + 1 rounds, and the result is always the converged
+    labeling — there is no iteration cap that could return a partial
+    one. Each round is one neighbor-min join of the persisted edge
+    list against the |V|-row label table plus one checkpoint job that
+    also counts the changed labels (_checkpoint_observed). The EDGE
+    list is shuffled at most once up front (the distinct, when
+    `dedupe`) and then only probed on its persisted partitioning.
+
+    Trade-off: rounds grow with the diameter. Pointer jumping
+    (hash-to-min with shortcuts, Rastogi et al. 2013) needs fewer
+    rounds on deep graphs but costs a second |V|-row join per round.
+    Measured warm at local[4] on a 4-core host: on a 64-node path
+    with ids in order it took 7 rounds (2.4 s) where propagation takes
+    64 (11.5 s); with shuffled ids, 33 rounds (8.5 s) against 54
+    (9.1 s). The co-purchase and near-duplicate graphs this serves
+    converge in 2-3 rounds either way, so there the shortcut join
+    would be pure cost.
 
     Lineage discipline: the per-round label table is localCheckpoint-ed
-    (eager). The pointer-jump SELF-join doubles the logical plan every
-    round — without truncation, analysis time alone goes exponential
-    (measured: a 64-node path graph never finished). This is the
-    opposite trade from pagerank's edges (graph.py:164): labels are the
-    |V|-row SMALL side, so deserialized checkpoint blocks are cheap and
-    an evicted block just fails fast rather than silently thrashing; on
-    a real cluster swap in df.checkpoint() to reliable storage for the
-    same truncation with durability.
-
-    Round shape (round 12): ONE checkpoint job per round. The
-    propagated table is persist-ed, not checkpointed — both sides of
-    the pointer-jump self-join read the cache inside the round's
-    single checkpoint job (block-level locking computes each cached
-    partition once), its lineage is bounded by the previous round's
-    checkpointed labels, and the cache is released as soon as the
-    round materializes. The convergence probe is an observed metric
-    on the same job (see _checkpoint_observed). The former shape paid
-    3 jobs per round (prop checkpoint, new checkpoint, changed-probe
-    count) for the identical arithmetic.
+    (eager). Each round reads the previous labels twice (the neighbor
+    side and the own-label side), so without truncation the logical
+    plan doubles every round. This is the opposite trade from
+    pagerank's persisted edges: labels are the |V|-row SMALL side, so
+    deserialized checkpoint blocks are cheap and an evicted block just
+    fails fast rather than silently thrashing; on a real cluster swap
+    in df.checkpoint() to reliable storage for the same truncation
+    with durability. The edge cache is released before returning,
+    also when a round raises: the checkpointed labels never read it
+    again.
     """
     und = scoped_persist(_symmetrized(edges, src, dst, dedupe))
+    try:
+        return _cc_rounds(und)
+    finally:
+        und.unpersist()
+
+
+def _cc_rounds(und: DataFrame) -> DataFrame:
+    """Shared min-label propagation core over a symmetrized
+    (__src, __dst) edge frame -> (node, component), run until no label
+    changes; see connected_components' docstring."""
     labels, nv = _checkpoint_observed(
         und.select(F.col("__src").alias("node")).distinct()
         .withColumn("component", F.col("node")),
         F.count(F.lit(1)))
-    for _ in range(max_iter):
+    changed = nv  # before round 1 any label may still fall
+    while changed:
         # |labels| = |V| is KNOWN (observed at init) — hint the
         # |V|-row sides broadcast while small so the planner never
         # rebuilds an edge-side hash relation per round nor
@@ -382,27 +373,17 @@ def connected_components(
             .groupBy(F.col("__dst").alias("node"))
             .agg(F.min("__l").alias("__nl"))
         )
-        # the pre-round component rides along as __old so convergence
-        # is a column compare on the round's own output — no extra
-        # new-vs-labels join per round (duplicate_clusters pattern)
-        prop = (
+        # the changed flag is a column of the round's own output, summed
+        # by its checkpoint job — no new-vs-old join, no probe job
+        labels, changed = _checkpoint_observed(
             labels.join(_bcast_if_small(nbr_min, nv), "node", "left")
             .select("node",
                     F.least(F.col("component"),
                             F.coalesce(F.col("__nl"), F.col("component"))
                             ).alias("component"),
-                    F.col("component").alias("__old"))
-            .persist()
-        )
-        try:
-            # pointer jump: component <- component(component). Every
-            # label is a node id, so the map is a |V|-row self-join.
-            labels, changed = _pointer_jump(prop, nv)
-        finally:
-            prop.unpersist()
-        if changed == 0:
-            break
-    und.unpersist()
+                    (F.col("__nl") < F.col("component")).alias("__chg")),
+            F.sum(F.col("__chg").cast("long")))
+        labels = labels.drop("__chg")
     return labels
 
 
@@ -481,7 +462,6 @@ def k_core(
     k: int,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
     dedupe: bool = True,
 ) -> DataFrame:
     """The k-core of an undirected graph -> (node, degree): the
@@ -518,14 +498,16 @@ def k_core(
     plan exponentially in rounds (measured: an 11-round peel exceeded
     the 2 GB plan-string limit). Convergence is the number of vertices
     the next round drops, observed by the round's checkpoint job
-    (_checkpoint_observed) — no probe job; `max_iter` is a backstop —
-    rounds are worst-case O(|V|) on a path graph but single digits on
-    real graphs (11 at sf0.01 for the co-purchase graph)."""
+    (_checkpoint_observed) — no probe job. The peel runs until a round
+    drops nothing, so the result is always the k-core itself: rounds
+    are worst-case O(|V|) on a path graph (a 100-node path at k=2
+    peels 2 vertices a round, 50 rounds) but single digits on real
+    graphs (11 at sf0.01 for the co-purchase graph)."""
     und = scoped_persist(_symmetrized(edges, src, dst, dedupe))
-    return _kcore_peel(und, k, max_iter)
+    return _kcore_peel(und, k)
 
 
-def _kcore_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
+def _kcore_peel(und: DataFrame, k: int) -> DataFrame:
     """Shared delta-peel core over a symmetrized (__src, __dst) edge
     frame -> (node, degree) for the k-core; see k_core's docstring.
 
@@ -541,9 +523,7 @@ def _kcore_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
     degs, ndrop = _checkpoint_observed(
         und.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg")),
         F.sum((F.col("__deg") < k).cast("long")))
-    for _ in range(max_iter):
-        if ndrop == 0:
-            break
+    while ndrop:
         # the frontier's row count is KNOWN (observed last round) —
         # hint it broadcast while small so neither the edges nor the
         # degree table pay a per-round hash-relation rebuild or
@@ -572,12 +552,7 @@ def _kcore_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
                        F.col("__deg").alias("degree"))
 
 
-def k_core_on_bucketed(
-    spark,
-    table: str,
-    k: int,
-    max_iter: int = 30,
-) -> DataFrame:
+def k_core_on_bucketed(spark, table: str, k: int) -> DataFrame:
     """k-core over an edge table written by `write_bucketed_edges` ->
     (node, degree), numerically identical to `k_core` on the same
     edges: the initial degree aggregation AND each round's
@@ -585,7 +560,7 @@ def k_core_on_bucketed(
     ZERO edge-side exchange (plan-tested) — only the frontier moves
     (and AQE broadcasts it once it shrinks). Feed it a SYMMETRIZED
     edge list, the connected_components_on_bucketed convention."""
-    return _kcore_peel(spark.table(table), k, max_iter)
+    return _kcore_peel(spark.table(table), k)
 
 
 def degree_distribution(edges: DataFrame, src: str = "src",
@@ -606,61 +581,19 @@ def degree_distribution(edges: DataFrame, src: str = "src",
             .agg(F.count(F.lit(1)).alias("n_vertices")))
 
 
-def connected_components_on_bucketed(
-    spark,
-    table: str,
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components_on_bucketed(spark, table: str) -> DataFrame:
     """Connected components over an edge table written by
     `write_bucketed_edges` -> (node, component), numerically identical
-    to `connected_components` on the same edges — the durable
-    co-location form: the per-round neighbor-min join probes the
-    bucketed scan on __src with ZERO edge-side exchange (plan-tested),
-    so the 100 TB graph never reshuffles across any number of rounds
-    or jobs. Only the |V|-row label table moves.
+    to `connected_components` on the same edges (the same `_cc_rounds`
+    loop) — the durable co-location form: the per-round neighbor-min
+    join probes the bucketed scan on __src with ZERO edge-side exchange
+    (plan-tested), so the 100 TB graph never reshuffles across any
+    number of rounds or jobs. Only the |V|-row label table moves.
 
     Feed it a SYMMETRIZED edge list (write both orientations before
     write_bucketed_edges) — bucketed storage fixes one physical
     partitioning, and symmetrizing at read time would break it."""
-    und = spark.table(table)
-    # one initial checkpoint, not two (the withColumn is free to fold
-    # into the distinct's job); round shape = connected_components:
-    # ONE observed checkpoint job per round, prop persisted
-    # intra-round, |V|-row sides broadcast-hinted off the measured
-    # count while small (see _BCAST_ROWS). NOTE the neighbor-min join
-    # keeps the bucketed scan exchange-free either way — the hint
-    # only spares the per-round sort of the stats-less label side.
-    labels, nv = _checkpoint_observed(
-        und.select(F.col("__src").alias("node")).distinct()
-        .withColumn("component", F.col("node")),
-        F.count(F.lit(1)))
-    for _ in range(max_iter):
-        nbr_min = (
-            und.join(_bcast_if_small(
-                labels.select(F.col("node").alias("__src"),
-                              F.col("component").alias("__l")), nv),
-                     "__src")
-            .groupBy(F.col("__dst").alias("node"))
-            .agg(F.min("__l").alias("__nl"))
-        )
-        # convergence folded into the round's output (see
-        # connected_components): __old rides along, no extra join
-        prop = (
-            labels.join(_bcast_if_small(nbr_min, nv), "node", "left")
-            .select("node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("__nl"), F.col("component"))
-                            ).alias("component"),
-                    F.col("component").alias("__old"))
-            .persist()
-        )
-        try:
-            labels, changed = _pointer_jump(prop, nv)
-        finally:
-            prop.unpersist()
-        if changed == 0:
-            break
-    return labels
+    return _cc_rounds(spark.table(table))
 
 
 def personalized_pagerank(

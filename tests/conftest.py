@@ -1,3 +1,5 @@
+import contextlib
+import glob
 import os
 import sys
 
@@ -34,6 +36,31 @@ def reference_params(values: list, path=lambda v: v) -> list:
         return [pytest.param(*([None] * width), id="no-reference",
                              marks=pytest.mark.skip(reason=_NO_REFERENCE))]
     return [v for v in values if os.path.exists(path(v))]
+
+
+def reference_glob(pattern: str) -> list[str]:
+    """The files matching `pattern` (recursive glob, relative to the
+    reference tree). Skips the calling test, naming the tree, where it
+    is absent; where it is present, no match is a failure."""
+    if not os.path.isdir(REFERENCE_ROOT):
+        pytest.skip(_NO_REFERENCE)
+    hits = glob.glob(reference_path(pattern), recursive=True)
+    assert hits, pattern
+    return hits
+
+
+@contextlib.contextmanager
+def no_auto_broadcast(spark):
+    """Turn automatic broadcast joins off for the block, then restore
+    the threshold read before it — the session's own, host-derived
+    value (session.host_defaults), not a fixed one."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ from decimal import Decimal
 
 import pytest
 
+from conftest import reference_glob
 from seatunnel_spark.avatica import (
     AvaticaClient,
     AvaticaError,
@@ -63,12 +64,9 @@ def test_phoenix_conf_runs_unmodified(spark, server, monkeypatch):
         [(20, "Lacia"), (30, "Kouka")])
     monkeypatch.setenv("SEATUNNEL_SPARK_HOST_ALIASES",
                        f"seatunnel_e2e_phoenix=http://127.0.0.1:{port}")
-    import glob
-
-    conf = glob.glob("/root/reference/seatunnel-e2e/"
-                     "seatunnel-connector-v2-e2e/connector-jdbc-e2e/*/"
-                     "src/test/resources/jdbc_phoenix_source_and_sink"
-                     ".conf")[0]
+    conf = reference_glob("seatunnel-e2e/seatunnel-connector-v2-e2e/"
+                          "connector-jdbc-e2e/*/src/test/resources/"
+                          "jdbc_phoenix_source_and_sink.conf")[0]
     JobEngine(spark).run(JobSpec.from_file(conf))
     upserts = [s for s in srv.statements
                if s.upper().startswith("UPSERT")]

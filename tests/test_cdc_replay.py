@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import reference_glob
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 from seatunnel_spark.sources.cdc_replay import CdcReplaySource, apply_ddl
@@ -970,8 +971,6 @@ def test_live_schema_change_to_postgres_confs(spark, monkeypatch, conf):
     """Cross-family schema evolution: a live MySQL binlog with a
     mid-stream ADD COLUMN lands on a POSTGRES sink (ALTER TABLE over
     the pg wire before upserting), plain and XA exactly-once."""
-    import glob
-
     from seatunnel_spark import mysql_binlog as B
     from seatunnel_spark.testing.mysql_server import start_mini_mysql
     from seatunnel_spark.testing.pg_server import start_mini_pg
@@ -1003,9 +1002,7 @@ def test_live_schema_change_to_postgres_confs(spark, monkeypatch, conf):
             "SEATUNNEL_SPARK_HOST_ALIASES",
             f"mysql_cdc_e2e=tcp://127.0.0.1:{port},"
             f"postgresql=tcp://127.0.0.1:{pg_port}")
-        path = glob.glob(
-            "/root/reference/seatunnel-e2e/**/" + conf + ".conf",
-            recursive=True)[0]
+        path = reference_glob("seatunnel-e2e/**/" + conf + ".conf")[0]
         spec = JobSpec.from_file(path)
         spec.env["streaming.await.timeout"] = 10
         try:

@@ -1,6 +1,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import no_auto_broadcast
 from seatunnel_spark.dataops import (
     brute_force_topk,
     embedding_near_dups,
@@ -1361,21 +1362,19 @@ def test_incremental_probe_against_bucketed_persisted_index(spark):
     try:
         write_bucketed(minhash_band_index(existing, "doc_id", "text"),
                        "mh_band_idx", ["band", "key"], num_buckets=4)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = incremental_minhash_matches(
-            new, spark.table("mh_band_idx"), "doc_id", "text",
-            max_bucket=None)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # exactly ONE side shuffles on the join key: the probe batch.
-        # The bucketed index side reads pre-partitioned files.
-        assert plan.count("Exchange hashpartitioning(band") <= 1
-        assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
-        rows = {(r["new_id"], r["match_id"]): r["n_bands"]
-                for r in out.collect()}
-        assert rows[(10, 1)] == 4
+        with no_auto_broadcast(spark):
+            out = incremental_minhash_matches(
+                new, spark.table("mh_band_idx"), "doc_id", "text",
+                max_bucket=None)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            # exactly ONE side shuffles on the join key: the probe batch.
+            # The bucketed index side reads pre-partitioned files.
+            assert plan.count("Exchange hashpartitioning(band") <= 1
+            assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
+            rows = {(r["new_id"], r["match_id"]): r["n_bands"]
+                    for r in out.collect()}
+            assert rows[(10, 1)] == 4
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS mh_band_idx")
 
 
@@ -2757,17 +2756,25 @@ def test_connected_components_multi_component(spark):
         (20, 21, 22, 23), 20)
 
 
-def test_connected_components_log_convergence_on_path(spark):
-    """A 32-node path has diameter 31; pointer jumping must label it
-    in far fewer rounds (max_iter=8 would NOT suffice for plain
-    min-propagation, which needs diameter rounds)."""
+def test_connected_components_converges_on_long_path(spark):
+    """A 64-node path (diameter 63) labels every node 0 under default
+    arguments, with ids in path order and shuffled. Min-label
+    propagation takes 64 rounds in order and 54 shuffled; the loop
+    runs until no label changes, so no round cap can hand back a
+    partial labeling."""
+    import random
+
     from seatunnel_spark.dataops.graph import connected_components
 
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(31)], ["src", "dst"])
-    got = {r["node"]: r["component"]
-           for r in connected_components(path, max_iter=8).collect()}
-    assert len(got) == 32 and set(got.values()) == {0}
+    in_order = list(range(64))
+    shuffled = in_order[:]
+    random.Random(7).shuffle(shuffled)
+    for ids in (in_order, shuffled):
+        path = spark.createDataFrame(
+            [(ids[i], ids[i + 1]) for i in range(63)], ["src", "dst"])
+        got = {r["node"]: r["component"]
+               for r in connected_components(path).collect()}
+        assert len(got) == 64 and set(got.values()) == {0}
 
 
 def test_checkpoint_observed_metric_and_truncation(spark):
@@ -2860,6 +2867,18 @@ def test_k_core_peel_cascade(spark):
     core = sorted((r["node"], r["degree"])
                   for r in k_core(df, 2).collect())
     assert core == [(20, 2), (21, 2), (22, 2)]
+
+
+def test_k_core_peels_a_long_path_to_empty(spark):
+    """A 100-node path at k=2 loses only its two end vertices per
+    round, so the peel takes 50 rounds. It runs until a round drops
+    nothing, so the 2-core comes back empty, not a partly peeled
+    path."""
+    from seatunnel_spark.dataops.graph import k_core
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(99)], ["src", "dst"])
+    assert k_core(path, 2).count() == 0
 
 
 def test_canonical_url_rules(spark):
@@ -3660,27 +3679,10 @@ class _RoundFails(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("op, fail_at", [
-    ("connected_components", 2),             # round 1: prop is live
-    ("connected_components_on_bucketed", 2),  # round 1: prop is live
-    ("hits", 2),                             # auth half-step: a_raw
-    ("hits", 3),                             # hub half-step: h_raw
-])
-def test_loop_persists_released_when_a_round_raises(spark, monkeypatch,
-                                                     op, fail_at):
-    """A round that raises must not leave its intra-round persist
-    behind. The Nth localCheckpoint runs (so the round's persisted
-    frame is materialized) and then raises; inside a cache_scope,
-    which releases the operators' scoped edge frames, the session's
-    cache must be empty afterwards."""
-    from seatunnel_spark.dataops import cache_scope, graph
-
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
-    assert cm.isEmpty()
-    path = [(str(i), str(i + 1)) for i in range(6)]
-    edges = spark.createDataFrame(path, ["src", "dst"])
-    frame_cls = type(edges)  # the classic DataFrame overrides the API's
+def _fail_at_checkpoint(monkeypatch, frame_cls, fail_at: int) -> list:
+    """Make the `fail_at`-th localCheckpoint run (so whatever its
+    round persisted is materialized) and then raise; returns the call
+    log."""
     real, calls = frame_cls.localCheckpoint, []
 
     def local_checkpoint(self, *args, **kwargs):
@@ -3690,20 +3692,52 @@ def test_loop_persists_released_when_a_round_raises(spark, monkeypatch,
             raise _RoundFails(f"localCheckpoint #{fail_at}")
         return out
 
+    monkeypatch.setattr(frame_cls, "localCheckpoint", local_checkpoint)
+    return calls
+
+
+def _run_loop(spark, op: str, edges):
+    from seatunnel_spark.dataops import duplicate_clusters, graph
+
+    if op == "connected_components_on_bucketed":
+        return graph.connected_components_on_bucketed(
+            spark, "cc_fail_edges").collect()
+    if op == "hits":
+        return graph.hits(edges, iters=2).collect()
+    if op == "duplicate_clusters":
+        return duplicate_clusters(edges, "src", "dst").collect()
+    return graph.connected_components(edges).collect()
+
+
+@pytest.mark.parametrize("op, fail_at", [
+    ("connected_components", 2),             # round 1's checkpoint
+    ("connected_components_on_bucketed", 2),  # round 1's checkpoint
+    ("duplicate_clusters", 2),               # round 1's checkpoint
+    ("hits", 2),                             # auth half-step: a_raw
+    ("hits", 3),                             # hub half-step: h_raw
+])
+def test_loop_persists_released_when_a_round_raises(spark, monkeypatch,
+                                                     op, fail_at):
+    """A round that raises must not leave a persist behind. The Nth
+    localCheckpoint runs and then raises; inside a cache_scope, which
+    releases the operators' scoped edge frames, the session's cache
+    must be empty afterwards."""
+    from seatunnel_spark.dataops import cache_scope, graph
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cm.isEmpty()
+    path = [(str(i), str(i + 1)) for i in range(6)]
+    edges = spark.createDataFrame(path, ["src", "dst"])
     if op == "connected_components_on_bucketed":
         graph.write_bucketed_edges(
             edges.union(edges.select("dst", "src")), "cc_fail_edges",
             num_buckets=4)
-    monkeypatch.setattr(frame_cls, "localCheckpoint", local_checkpoint)
+    # the classic DataFrame overrides the API's localCheckpoint
+    calls = _fail_at_checkpoint(monkeypatch, type(edges), fail_at)
     try:
         with cache_scope(), pytest.raises(_RoundFails):
-            if op == "connected_components_on_bucketed":
-                graph.connected_components_on_bucketed(
-                    spark, "cc_fail_edges").collect()
-            elif op == "hits":
-                graph.hits(edges, iters=2).collect()
-            else:
-                graph.connected_components(edges).collect()
+            _run_loop(spark, op, edges)
         assert len(calls) == fail_at
         # checked before the DROP TABLE below, which uncaches the
         # frames that read the table
@@ -3711,6 +3745,30 @@ def test_loop_persists_released_when_a_round_raises(spark, monkeypatch,
     finally:
         monkeypatch.undo()
         spark.sql("DROP TABLE IF EXISTS cc_fail_edges")
+        spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("op", ["connected_components",
+                                "duplicate_clusters"])
+def test_cc_edges_released_without_scope_when_a_round_raises(
+        spark, monkeypatch, op):
+    """Outside any cache_scope, connected_components (and
+    duplicate_clusters, which runs it) must still release its
+    persisted edge list when round 1 raises: the release sits in a
+    finally, not after the loop."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cm.isEmpty()
+    path = [(str(i), str(i + 1)) for i in range(6)]
+    edges = spark.createDataFrame(path, ["src", "dst"])
+    calls = _fail_at_checkpoint(monkeypatch, type(edges), 2)
+    try:
+        with pytest.raises(_RoundFails):
+            _run_loop(spark, op, edges)
+        assert len(calls) == 2
+        assert cm.isEmpty()
+    finally:
+        monkeypatch.undo()
         spark.catalog.clearCache()
 
 

@@ -10,7 +10,6 @@ CREATE_SOURCE_SQL column set)."""
 
 import datetime
 import decimal
-import glob
 import hashlib
 import hmac
 
@@ -18,6 +17,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import reference_glob
 from seatunnel_spark import hana_wire as H
 from seatunnel_spark.testing.hana_server import _col, start_mini_hana
 
@@ -286,15 +286,11 @@ def test_hana_auth_failure():
 
 # -- the two reference confs, UNMODIFIED ---------------------------------
 
-_BASE = ("/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e/"
-         "connector-jdbc-e2e")
+_BASE = "seatunnel-e2e/seatunnel-connector-v2-e2e/connector-jdbc-e2e"
 
 
 def _find_conf(name: str) -> str:
-    hits = glob.glob(f"{_BASE}/*/src/test/resources/**/{name}",
-                     recursive=True)
-    assert hits, name
-    return hits[0]
+    return reference_glob(f"{_BASE}/*/src/test/resources/**/{name}")[0]
 
 
 def test_jdbc_sap_hana_source_and_sink_conf(spark, monkeypatch):

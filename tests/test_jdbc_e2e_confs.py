@@ -12,20 +12,15 @@ import re
 
 import pytest
 
+from conftest import reference_glob
 from seatunnel_spark.job.engine import JobEngine
 from seatunnel_spark.job.spec import JobSpec
 
-_BASE = ("/root/reference/seatunnel-e2e/seatunnel-connector-v2-e2e/"
-         "connector-jdbc-e2e")
+_BASE = "seatunnel-e2e/seatunnel-connector-v2-e2e/connector-jdbc-e2e"
 
 
 def _find_conf(name: str) -> str:
-    import glob
-
-    hits = glob.glob(f"{_BASE}/*/src/test/resources/**/{name}",
-                     recursive=True)
-    assert hits, name
-    return hits[0]
+    return reference_glob(f"{_BASE}/*/src/test/resources/**/{name}")[0]
 
 
 def _insert_columns(text: str) -> list[str] | None:

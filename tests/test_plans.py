@@ -6,6 +6,7 @@ HERE rather than in a cluster."""
 import pytest
 
 import __spark_entry__ as entry
+from conftest import no_auto_broadcast
 
 
 @pytest.fixture(scope="module")
@@ -90,13 +91,12 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         write_bucketed(o, "bk_orders", ["o_orderkey"], num_buckets=8)
         write_bucketed(li, "bk_lineitem", ["o_orderkey"], num_buckets=8)
         # disable broadcast so the join would otherwise shuffle both sides
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = colocated_join(spark, "bk_orders", "bk_lineitem", ["o_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() > 0
+        with no_auto_broadcast(spark):
+            joined = colocated_join(spark, "bk_orders", "bk_lineitem", ["o_orderkey"])
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" not in plan
+            assert joined.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_orders")
         spark.sql("DROP TABLE IF EXISTS bk_lineitem")
 
@@ -582,27 +582,25 @@ def test_pagerank_bucketed_edges_join_without_exchange(spark, sf_dir):
                              F.col("src").alias("dst")))
     try:
         write_bucketed_edges(edges, "bk_pr_edges", num_buckets=8)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = spark.table("bk_pr_edges")
-        deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
-        frag = e.join(deg, "__src")
-        p = frag._jdf.queryExecution().executedPlan().toString()
-        # both sides derive from the bucketed scan: zero exchange
-        assert "Exchange" not in p
-        full = pagerank_on_bucketed(spark, "bk_pr_edges", iters=2)
-        fp = full._jdf.queryExecution().executedPlan().toString()
-        # bucketed read is active, and the only __src exchanges are
-        # the ranks side (one per iteration) — never edges or degrees
-        assert "Bucketed: true" in fp
-        assert fp.count("Exchange hashpartitioning(__src") <= 2
-        # numerically identical to the in-memory path
-        a = {r["node"]: r["rank"] for r in full.collect()}
-        b = {r["node"]: r["rank"]
-             for r in pagerank(edges, iters=2).collect()}
-        assert a == b
+        with no_auto_broadcast(spark):
+            e = spark.table("bk_pr_edges")
+            deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
+            frag = e.join(deg, "__src")
+            p = frag._jdf.queryExecution().executedPlan().toString()
+            # both sides derive from the bucketed scan: zero exchange
+            assert "Exchange" not in p
+            full = pagerank_on_bucketed(spark, "bk_pr_edges", iters=2)
+            fp = full._jdf.queryExecution().executedPlan().toString()
+            # bucketed read is active, and the only __src exchanges are
+            # the ranks side (one per iteration) — never edges or degrees
+            assert "Bucketed: true" in fp
+            assert fp.count("Exchange hashpartitioning(__src") <= 2
+            # numerically identical to the in-memory path
+            a = {r["node"]: r["rank"] for r in full.collect()}
+            b = {r["node"]: r["rank"]
+                 for r in pagerank(edges, iters=2).collect()}
+            assert a == b
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_pr_edges")
 
 
@@ -628,29 +626,27 @@ def test_triangles_bucketed_wedge_join_without_exchange(spark, sf_dir):
     try:
         write_bucketed_edges(edges, "bk_tri_edges", src="p", dst="q",
                              dedupe=False, num_buckets=8)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        t = spark.table("bk_tri_edges")
-        x, y = t.alias("x"), t.alias("y")
-        wedge = x.join(y, (F.col("x.__src") == F.col("y.__src"))
-                       & (F.col("x.__dst") < F.col("y.__dst")))
-        wp = wedge._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in wp and "Bucketed: true" in wp
-        full = triangles_on_bucketed(spark, "bk_tri_edges",
-                                     max_degree=None)
-        fp = full._jdf.queryExecution().executedPlan().toString()
-        # the only exchanges left: wedge rows moving to the close join
-        # (never on the bucketed edge side) + the 1-row final agg
-        assert fp.count("Exchange hashpartitioning") <= 1
-        got = full.collect()[0]["n_triangles"]
-        exp = triangle_count(edges, "p", "q",
-                             max_degree=None).collect()[0]["n_triangles"]
-        assert got == exp and got > 0
-        # the capped form agrees on this hub-free graph
-        assert triangles_on_bucketed(spark, "bk_tri_edges") \
-            .collect()[0]["n_triangles"] == exp
+        with no_auto_broadcast(spark):
+            t = spark.table("bk_tri_edges")
+            x, y = t.alias("x"), t.alias("y")
+            wedge = x.join(y, (F.col("x.__src") == F.col("y.__src"))
+                           & (F.col("x.__dst") < F.col("y.__dst")))
+            wp = wedge._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in wp and "Bucketed: true" in wp
+            full = triangles_on_bucketed(spark, "bk_tri_edges",
+                                         max_degree=None)
+            fp = full._jdf.queryExecution().executedPlan().toString()
+            # the only exchanges left: wedge rows moving to the close join
+            # (never on the bucketed edge side) + the 1-row final agg
+            assert fp.count("Exchange hashpartitioning") <= 1
+            got = full.collect()[0]["n_triangles"]
+            exp = triangle_count(edges, "p", "q",
+                                 max_degree=None).collect()[0]["n_triangles"]
+            assert got == exp and got > 0
+            # the capped form agrees on this hub-free graph
+            assert triangles_on_bucketed(spark, "bk_tri_edges") \
+                .collect()[0]["n_triangles"] == exp
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_tri_edges")
 
 
@@ -862,7 +858,7 @@ def test_connected_components_edges_cached_once(spark):
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["src", "dst"])
-    out = connected_components(df, max_iter=4)
+    out = connected_components(df)
     p = out._jdf.queryExecution().executedPlan().toString()
     # the returned frame is a localCheckpoint scan; correctness of the
     # caching is observable via the catalog: no lingering cached plan
@@ -889,26 +885,24 @@ def test_connected_bucketed_edge_join_without_exchange(spark):
                                    F.col("src").alias("dst")))
     try:
         write_bucketed_edges(und, "bk_cc_test", num_buckets=4)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = spark.table("bk_cc_test")
-        labels = e.select(F.col("__src").alias("node")).distinct() \
-                  .localCheckpoint()
-        frag = e.join(labels.select(F.col("node").alias("__src")),
-                      "__src")
-        p = frag._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in p
-        # the edge scan side must contribute no exchange; the only
-        # exchange allowed is the label side moving to the buckets
-        assert p.count("Exchange") <= 1
-        got = {r["node"]: r["component"] for r in
-               connected_components_on_bucketed(
-                   spark, "bk_cc_test").collect()}
-        want = {r["node"]: r["component"] for r in
-                connected_components(edges).collect()}
-        assert got == want
+        with no_auto_broadcast(spark):
+            e = spark.table("bk_cc_test")
+            labels = e.select(F.col("__src").alias("node")).distinct() \
+                      .localCheckpoint()
+            frag = e.join(labels.select(F.col("node").alias("__src")),
+                          "__src")
+            p = frag._jdf.queryExecution().executedPlan().toString()
+            assert "Bucketed: true" in p
+            # the edge scan side must contribute no exchange; the only
+            # exchange allowed is the label side moving to the buckets
+            assert p.count("Exchange") <= 1
+            got = {r["node"]: r["component"] for r in
+                   connected_components_on_bucketed(
+                       spark, "bk_cc_test").collect()}
+            want = {r["node"]: r["component"] for r in
+                    connected_components(edges).collect()}
+            assert got == want
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_cc_test")
 
 
@@ -929,26 +923,24 @@ def test_lpa_bucketed_edge_join_without_exchange(spark):
                                    F.col("src").alias("dst")))
     try:
         write_bucketed_edges(und, "bk_lpa_test", num_buckets=4)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = spark.table("bk_lpa_test")
-        labels = (e.select(F.col("__src").alias("node")).distinct()
-                  .withColumn("label", F.col("node"))
-                  .localCheckpoint())
-        frag = e.join(labels.select(F.col("node").alias("__src"),
-                                    F.col("label").alias("__l")),
-                      "__src")
-        p = frag._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in p
-        assert p.count("Exchange") <= 1  # labels move; edges never
-        got = {r["node"]: r["label"] for r in
-               label_propagation_on_bucketed(
-                   spark, "bk_lpa_test", iters=2).collect()}
-        want = {r["node"]: r["label"] for r in
-                label_propagation(edges, iters=2).collect()}
-        assert got == want
+        with no_auto_broadcast(spark):
+            e = spark.table("bk_lpa_test")
+            labels = (e.select(F.col("__src").alias("node")).distinct()
+                      .withColumn("label", F.col("node"))
+                      .localCheckpoint())
+            frag = e.join(labels.select(F.col("node").alias("__src"),
+                                        F.col("label").alias("__l")),
+                          "__src")
+            p = frag._jdf.queryExecution().executedPlan().toString()
+            assert "Bucketed: true" in p
+            assert p.count("Exchange") <= 1  # labels move; edges never
+            got = {r["node"]: r["label"] for r in
+                   label_propagation_on_bucketed(
+                       spark, "bk_lpa_test", iters=2).collect()}
+            want = {r["node"]: r["label"] for r in
+                    label_propagation(edges, iters=2).collect()}
+            assert got == want
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_lpa_test")
 
 
@@ -972,27 +964,25 @@ def test_kcore_bucketed_frontier_join_without_exchange(spark):
                                    F.col("src").alias("dst")))
     try:
         write_bucketed_edges(und, "bk_kcore_test", num_buckets=4)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = spark.table("bk_kcore_test")
-        # degree aggregation: partial agg runs on the bucketed scan,
-        # final agg needs no exchange (grouping key == bucket key)
-        deg = e.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
-        p = deg._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in p and "Exchange" not in p
-        dropped = (deg.filter(F.col("__deg") < 2)
-                   .select(F.col("__src").alias("__d"))
-                   .localCheckpoint())
-        frag = e.join(dropped, e["__src"] == dropped["__d"])
-        fp = frag._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in fp
-        assert fp.count("Exchange") <= 1  # frontier moves; edges never
-        got = sorted((r["node"], r["degree"]) for r in
-                     k_core_on_bucketed(spark, "bk_kcore_test",
-                                        k=2).collect())
-        want = sorted((r["node"], r["degree"]) for r in
-                      k_core(edges, 2).collect())
-        assert got == want == [(1, 3), (2, 3), (3, 2), (4, 2)]
+        with no_auto_broadcast(spark):
+            e = spark.table("bk_kcore_test")
+            # degree aggregation: partial agg runs on the bucketed scan,
+            # final agg needs no exchange (grouping key == bucket key)
+            deg = e.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
+            p = deg._jdf.queryExecution().executedPlan().toString()
+            assert "Bucketed: true" in p and "Exchange" not in p
+            dropped = (deg.filter(F.col("__deg") < 2)
+                       .select(F.col("__src").alias("__d"))
+                       .localCheckpoint())
+            frag = e.join(dropped, e["__src"] == dropped["__d"])
+            fp = frag._jdf.queryExecution().executedPlan().toString()
+            assert "Bucketed: true" in fp
+            assert fp.count("Exchange") <= 1  # frontier moves; edges never
+            got = sorted((r["node"], r["degree"]) for r in
+                         k_core_on_bucketed(spark, "bk_kcore_test",
+                                            k=2).collect())
+            want = sorted((r["node"], r["degree"]) for r in
+                          k_core(edges, 2).collect())
+            assert got == want == [(1, 3), (2, 3), (3, 2), (4, 2)]
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS bk_kcore_test")
